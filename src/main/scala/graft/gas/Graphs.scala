@@ -3,6 +3,7 @@ package graft.gas
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Bounded
 import graft.util.Fixpoint.{materialize, materializeKeyed}
 
 /** Graph analytics over edge DataFrames — the GAS layer's programs
@@ -40,30 +41,24 @@ object Graphs {
       edges.select(cols.head, cols.tail: _*)
         .repartition(col("src")).dropDuplicates("src", "dst"))
 
-  /** Edge-count bound under which bfs/sssp/pagerank solve locally on the
-    * driver (arrays over the collected edge list) instead of scheduling
-    * per-round join jobs — the same adaptive discipline as
-    * [[CcLocalMaxEdgesConf]]: the driver pays O(edges) flat primitive
-    * memory (2M edges ≈ tens of MB in int/long arrays, broadcast-relation
-    * territory), the count-first probe on the checkpointed edge frame is
-    * one cheap no-transfer job so an over-bound graph never ships rows to
-    * the driver, and past the bound the distributed loops run unchanged —
-    * 100 TB graphs never touch the driver. All three programs are exact integer computations (min-hop,
-    * min-weight, scaled-integer rank), so sums/mins carry no accumulation-
-    * order dependence and the two paths are bit-identical (pinned by the
-    * force-bound-0 parity specs in AnalyticsSpec). Like localComponents,
-    * the local path emits LongType node ids (the declared graph queries
-    * and the distributed outputs are already LongType).
-    * Override with spark.graft.graphLocalMaxEdges; 0 disables.
+  /** Edge-count bound for the driver-local bfs/sssp/pagerank passes (see
+    * [[graft.util.Bounded]]; 2M edges are tens of MB in int/long arrays).
+    * All three programs are exact integer computations (min-hop,
+    * min-weight, scaled-integer rank), so the two paths are bit-identical.
+    * Like localComponents, the local path emits LongType node ids.
     */
   val GraphLocalMaxEdgesConf = "spark.graft.graphLocalMaxEdges"
   val GraphLocalMaxEdgesDefault = 2000000L
 
-  private def graphLocalBound(df: DataFrame): Int = {
-    val b = df.sparkSession.conf.getOption(GraphLocalMaxEdgesConf)
-      .map(_.toLong).getOrElse(GraphLocalMaxEdgesDefault)
-    math.min(math.max(b, 0L), (Int.MaxValue - 8).toLong).toInt
-  }
+  private def graphBound(spark: SparkSession): Int =
+    Bounded.bound(spark, GraphLocalMaxEdgesConf, GraphLocalMaxEdgesDefault)
+
+  /** The edge frame as the local passes read it: long endpoints, then
+    * `more` columns as they are.
+    */
+  private def longEdges(e: DataFrame, more: String*): DataFrame =
+    e.select(Seq(col("src").cast(LongType), col("dst").cast(LongType)) ++
+             more.map(col): _*)
 
   /** Dense node→index assignment over collected edge endpoints (driver
     * fast paths): primitive map + flat id array, no boxing.
@@ -84,6 +79,23 @@ object Graphs {
     def lookup(node: Long): Int = map.getOrDefault(node, -1L).toInt
   }
 
+  /** Dense ids for collected edge rows: the node index (ids assigned in
+    * row order, src before dst) plus each edge's src and dst id.
+    */
+  private def indexEdges(eRows: Array[Row]): (NodeIndex, Array[Int], Array[Int]) = {
+    val m = eRows.length
+    val ix = new NodeIndex(m * 2)
+    val srcIdx = new Array[Int](m)
+    val dstIdx = new Array[Int](m)
+    var i = 0
+    while (i < m) {
+      srcIdx(i) = ix.id(eRows(i).getLong(0))
+      dstIdx(i) = ix.id(eRows(i).getLong(1))
+      i += 1
+    }
+    (ix, srcIdx, dstIdx)
+  }
+
   private def longRows(spark: SparkSession, rows: Seq[Row],
                        names: String*): DataFrame =
     spark.createDataFrame(
@@ -98,20 +110,15 @@ object Graphs {
     // edges forced sort-merge rounds and graph_bfs went 1.7s → 2.7-5.2s)
     val e = materialize(edges.select("src", "dst").distinct())
     val srcs = sources.select(col("node").cast(LongType)).distinct()
-    // count-first probe (the CC discipline): counting the checkpointed
-    // frame is one cheap no-transfer job, so an over-bound graph never
-    // ships `bound` rows to the driver just to discard them
-    val bound = graphLocalBound(e)
-    if (bound > 0 && e.count() <= bound) {
-      val eRows = e.select(col("src").cast(LongType), col("dst").cast(LongType))
-        .collect()
-      // sources are seed-bounded in practice; the limit-probe collects
-      // once and falls back only in the pathological huge-source case
-      val sRows = srcs.limit(bound + 1).collect()
-      if (sRows.length <= bound)
-        return localBfs(e.sparkSession, eRows, sRows, maxDepth)
-    }
-    bfsLoop(e, srcs, maxDepth)
+    val bound = graphBound(e.sparkSession)
+    // sources are seed-bounded in practice: a huge source set falls back
+    val probe = for {
+      eRows <- Bounded.collect(longEdges(e), bound)
+      sRows <- Bounded.collect(srcs, bound)
+    } yield (eRows, sRows)
+    Bounded.choose("bfs", probe) { case (eRows, sRows) =>
+      Some(localBfs(e.sparkSession, eRows, sRows, maxDepth))
+    }(bfsLoop(e, srcs, maxDepth))
   }
 
   /** Exact min-hop counts via driver BFS — bit-identical to the round loop
@@ -121,18 +128,10 @@ object Graphs {
   private def localBfs(spark: SparkSession, eRows: Array[Row],
                        sRows: Array[Row], maxDepth: Int): DataFrame = {
     val m = eRows.length
-    val ix = new NodeIndex(m * 2)
-    val srcIdx = new Array[Int](m)
-    val dstIdx = new Array[Int](m)
-    var i = 0
-    while (i < m) {
-      srcIdx(i) = ix.id(eRows(i).getLong(0))
-      dstIdx(i) = ix.id(eRows(i).getLong(1))
-      i += 1
-    }
+    val (ix, srcIdx, dstIdx) = indexEdges(eRows)
     // CSR adjacency
     val off = new Array[Int](ix.n + 1)
-    i = 0; while (i < m) { off(srcIdx(i) + 1) += 1; i += 1 }
+    var i = 0; while (i < m) { off(srcIdx(i) + 1) += 1; i += 1 }
     i = 0; while (i < ix.n) { off(i + 1) += off(i); i += 1 }
     val cursor = java.util.Arrays.copyOf(off, ix.n)
     val adj = new Array[Int](m)
@@ -211,13 +210,10 @@ object Graphs {
     // pre-partitioned edge frame (see bfs note)
     val e = materialize(
       edges.select(col("src"), col("dst"), col("weight").cast(LongType)))
-    val bound = graphLocalBound(e)
-    if (bound > 0 && e.count() <= bound) // count-first probe: see bfs
-      localSssp(e.sparkSession,
-        e.select(col("src").cast(LongType), col("dst").cast(LongType),
-                 col("weight")).collect(),
-        source, maxHops)
-    else ssspLoop(e, source, maxHops)
+    Bounded.choose("sssp",
+        Bounded.collect(longEdges(e, "weight"), graphBound(e.sparkSession))) {
+      eRows => Some(localSssp(e.sparkSession, eRows, source, maxHops))
+    }(ssspLoop(e, source, maxHops))
   }
 
   /** Exact hop-bounded Bellman-Ford on the driver — bit-identical to the
@@ -230,17 +226,8 @@ object Graphs {
                         source: Long, maxHops: Int): DataFrame = {
     val INF = Long.MaxValue
     val m = eRows.length
-    val ix = new NodeIndex(m * 2)
-    val srcIdx = new Array[Int](m)
-    val dstIdx = new Array[Int](m)
-    val w = new Array[Long](m)
-    var i = 0
-    while (i < m) {
-      srcIdx(i) = ix.id(eRows(i).getLong(0))
-      dstIdx(i) = ix.id(eRows(i).getLong(1))
-      w(i) = eRows(i).getLong(2)
-      i += 1
-    }
+    val (ix, srcIdx, dstIdx) = indexEdges(eRows)
+    val w = Array.tabulate(m)(eRows(_).getLong(2))
     val sId = ix.lookup(source)
     if (sId < 0) // source not in the graph: the init frame is the result
       return longRows(spark, Seq(Row(source, 0L)), "node", "dist")
@@ -264,7 +251,7 @@ object Graphs {
       prev = next; hop += 1
     }
     val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-    i = 0
+    var i = 0
     while (i < ix.n) {
       if (prev(i) != INF) out += Row(ix.nodes(i), prev(i))
       i += 1
@@ -318,15 +305,8 @@ object Graphs {
     * label frame, which is node-, not edge-, sized, so the "delta saves
     * shuffle bytes" argument buys little here to begin with.
     */
-  /** Edge-count bound under which connectedComponents solves locally on
-    * the driver (union-find over the collected, deduped edge list) instead
-    * of running the iterative label-propagation rounds. The same adaptive
-    * pattern as a broadcast join or [[graft.sparql.Paths.seededClosure]]'s
-    * broadcastMaxRows: the driver pays O(edges) memory — 2M two-long rows
-    * ≈ tens of MB, well under any broadcast-relation budget — and saves
-    * O(log n) scheduled rounds of joins; past the bound the distributed
-    * loop runs unchanged, so 100 TB graphs never touch the driver.
-    * Override with spark.graft.ccLocalMaxEdges.
+  /** Edge-count bound for connectedComponents' driver union-find (see
+    * [[graft.util.Bounded]]).
     */
   val CcLocalMaxEdgesConf = "spark.graft.ccLocalMaxEdges"
   val CcLocalMaxEdgesDefault = 2000000L
@@ -334,14 +314,11 @@ object Graphs {
   /** Exact min-label components via driver union-find — bit-identical to
     * the fixpoint result (component = minimum reachable node id).
     */
-  private def localComponents(e: DataFrame): DataFrame = {
-    val spark = e.sparkSession
+  private def localComponents(spark: SparkSession, rows: Array[Row]): DataFrame = {
     // open-addressed long→long parent map (graft.util.LongLongMap): ~5x
     // less driver heap per entry than the boxed java.util.HashMap this
     // used, no per-union garbage — the conf'd edge bound buys 5x more
     // headroom at the same driver budget
-    val rows = e.select(col("src").cast(LongType), col("dst").cast(LongType))
-      .collect()
     val parent = new graft.util.LongLongMap(rows.length * 2)
     def find(x: Long): Long = {
       var r = x
@@ -363,29 +340,24 @@ object Graphs {
         if (rs < rd) parent.put(rd, rs) else parent.put(rs, rd)
       }
     }
-    val out = new Array[org.apache.spark.sql.Row](parent.size)
+    val out = new Array[Row](parent.size)
     var i = 0
     // find() inside the iteration only path-halves (value updates on
     // existing keys — no insert, so no resize): safe during foreachEntry
     parent.foreachEntry { (n, _) =>
-      out(i) = org.apache.spark.sql.Row(n, find(n))
+      out(i) = Row(n, find(n))
       i += 1
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toIndexedSeq),
-      StructType(Seq(StructField("node", LongType, nullable = false),
-                     StructField("component", LongType, nullable = false))))
+    longRows(spark, out.toIndexedSeq, "node", "component")
   }
 
   def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame = {
     val e = keyedEdges(edges, "src", "dst")
-    val localMax = e.sparkSession.conf.getOption(CcLocalMaxEdgesConf)
-      .map(_.toLong).getOrElse(CcLocalMaxEdgesDefault)
-    // bounded-size fast path: counting the checkpointed frame is one cheap
-    // job, and below the bound the whole O(log n)-round loop collapses to
-    // a single driver pass (exact same labels; see localComponents)
-    if (e.count() <= localMax) localComponents(e)
-    else connectedComponentsLoop(e, maxIters)
+    val bound = Bounded.bound(e.sparkSession, CcLocalMaxEdgesConf,
+                              CcLocalMaxEdgesDefault)
+    Bounded.choose("cc", Bounded.collect(longEdges(e), bound)) {
+      rows => Some(localComponents(e.sparkSession, rows))
+    }(connectedComponentsLoop(e, maxIters))
   }
 
   /** The distributed fixpoint (unchanged): min-label propagation + double
@@ -441,12 +413,10 @@ object Graphs {
     */
   def pagerank(edges: DataFrame, iters: Int): DataFrame = {
     val e = materialize(edges.select("src", "dst").distinct())
-    val bound = graphLocalBound(e)
-    if (bound > 0 && e.count() <= bound) // count-first probe: see bfs
-      localPagerank(e.sparkSession,
-        e.select(col("src").cast(LongType), col("dst").cast(LongType)).collect(),
-        iters)
-    else pagerankLoop(e, iters)
+    Bounded.choose("pagerank",
+        Bounded.collect(longEdges(e), graphBound(e.sparkSession))) {
+      eRows => Some(localPagerank(e.sparkSession, eRows, iters))
+    }(pagerankLoop(e, iters))
   }
 
   /** Exact scaled-integer PageRank on the driver — bit-identical to the
@@ -460,17 +430,9 @@ object Graphs {
                             iters: Int): DataFrame = {
     val Unit_ : Long = 1000000000000L
     val m = eRows.length
-    val ix = new NodeIndex(m * 2)
-    val srcIdx = new Array[Int](m)
-    val dstIdx = new Array[Int](m)
-    var i = 0
-    while (i < m) {
-      srcIdx(i) = ix.id(eRows(i).getLong(0))
-      dstIdx(i) = ix.id(eRows(i).getLong(1))
-      i += 1
-    }
+    val (ix, srcIdx, dstIdx) = indexEdges(eRows)
     val deg = new Array[Long](ix.n)
-    i = 0; while (i < m) { deg(srcIdx(i)) += 1L; i += 1 }
+    var i = 0; while (i < m) { deg(srcIdx(i)) += 1L; i += 1 }
     val rank = new Array[Long](ix.n)
     java.util.Arrays.fill(rank, Unit_)
     var it = 0

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.util.Bounded
 
 /** Hybrid-retrieval rank fusion — the glue between the engine's sparse
   * (BM25/tf-cosine full-text) and dense (ANN cosine) rankings.
@@ -65,15 +66,13 @@ object Retrieval {
     * Scale posture: `candidates` is a TOP-K frame by construction (queries
     * × k rows — the corpus-sized work already happened in the ANN stage),
     * so the pairwise-similarity frame is queries × k² bounded rows. Under
-    * the size guard (count-then-choose, the union-find discipline) the
-    * greedy loop runs DRIVER-SIDE over the collected micro-frames — an
-    * interactive re-rank is a handful of rows, and `select` distributed
-    * rounds would pay `select` scheduler round-trips to shuffle nothing
-    * (measured 6.3s → sub-second at sf0.1). A large batch (re-ranking for
-    * millions of queries at once) exceeds the guard and takes the
-    * distributed loop: per-query windows over the bounded pair frame, one
-    * materialized round per pick. Both paths are the same integer
-    * arithmetic — bit-identical picks (spec-pinned). The greedy dependence
+    * the size guard ([[graft.util.Bounded]]) the greedy loop runs
+    * DRIVER-SIDE over the collected micro-frames (measured 6.3s →
+    * sub-second at sf0.1). A large batch (re-ranking for millions of
+    * queries at once) exceeds the guard and takes the distributed loop:
+    * per-query windows over the bounded pair frame, one materialized round
+    * per pick. Both paths are the same integer arithmetic — bit-identical
+    * picks (spec-pinned). The greedy dependence
     * is inherent to MMR — pick i+1 is defined on picks 1..i — but nothing
     * here ever touches the corpus.
     *
@@ -104,13 +103,12 @@ object Retrieval {
     // pushes an In() filter into the embedding scan — a point lookup with
     // row-group pruning, not a 100 TB corpus scan to fetch a few dozen
     // vectors. A pathological candidate set falls back to the plain join.
-    val candIds = cand.select("vec_id").distinct().limit(10001).collect()
     val eAll = emb.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
-    val e =
-      if (candIds.length <= 10000)
-        eAll.filter(col("vec_id").isin(candIds.map(_.getLong(0)).toSeq: _*))
-      else eAll
+    val e = Bounded.collect(cand.select("vec_id").distinct(), 10000) match {
+      case Some(ids) => eAll.filter(col("vec_id").isin(ids.map(_.getLong(0)).toSeq: _*))
+      case None => eAll
+    }
     val withV = cand.join(e, "vec_id")
     // lazy: when the candidate count alone already exceeds the driver
     // guard, the distributed loop materializes the pair frame on first
@@ -123,21 +121,20 @@ object Retrieval {
       .select(col("q_id"), col("a_id"), col("b_id"),
         round(Similarity.cosine(col("av"), col("bv")) * 1e6).cast(LongType)
           .as("sim_micro")))
-    // driver-side greedy under the guard: the pair frame is queries × k²
-    // by construction; when it fits, `select` scheduler round-trips that
-    // shuffle nothing are pure overhead. BOTH frames are bounded — a
+    // driver-side greedy under the guard. BOTH frames are bounded — a
     // degenerate batch (one candidate per query, k=1) has ZERO pairs, so
     // a pairs-only guard would wave a million-row candidate frame through
-    // to cand.collect(). The cand count is the cheaper gate and runs
-    // FIRST: an over-bound candidate frame short-circuits straight to the
-    // distributed loop without counting (or materializing) pairs at all
-    val candCount = cand.limit(driverMax + 1).count()
-    if (candCount <= driverMax &&
-        pairs.limit(driverMax + 1).count() <= driverMax) {
+    // to the driver. The cand probe is the cheaper gate and runs FIRST: an
+    // over-bound candidate frame short-circuits straight to the
+    // distributed loop without collecting (or materializing) pairs at all
+    val probe = for {
+      cRows <- Bounded.collect(cand, driverMax)
+      pRows <- Bounded.collect(pairs, driverMax)
+    } yield (cRows, pRows)
+    Bounded.choose("mmr", probe) { case (cRows, pRows) =>
       val spark = emb.sparkSession
-      val cs = cand.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val sims = pairs.collect()
+      val cs = cRows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val sims = pRows
         .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)), r.getLong(3)))
         .toMap
       val out = Seq.newBuilder[(Long, Long, Long, Long, Long)]
@@ -169,19 +166,20 @@ object Retrieval {
         org.apache.spark.sql.types.StructField("rel_micro", LongType, true),
         org.apache.spark.sql.types.StructField("mmr_scaled", LongType, true)))
       import scala.jdk.CollectionConverters._
-      return spark.createDataFrame(
+      Some(spark.createDataFrame(
         out.result().map { case (q, i, v, rel, mmr) =>
           org.apache.spark.sql.Row(q, i, v, rel, mmr) }.asJava,
-        outSchema)
+        outSchema))
+    } {
+      var selected: DataFrame = null
+      for (i <- 1 to select) {
+        val next = mmrRound(cand, pairs,
+                            if (i == 1) None else Some(selected), i, lambdaPct)
+        selected = materialize(
+          if (i == 1) next else selected.unionByName(next))
+      }
+      selected
     }
-    var selected: DataFrame = null
-    for (i <- 1 to select) {
-      val next = mmrRound(cand, pairs,
-                          if (i == 1) None else Some(selected), i, lambdaPct)
-      selected = materialize(
-        if (i == 1) next else selected.unionByName(next))
-    }
-    selected
   }
 
   /** One round of the distributed MMR greedy loop: the pick-i frame given

@@ -88,20 +88,27 @@ object AnalyticsSuite {
         Tables.load(s, d, "documents").select(col("doc_id").as("doc"), col("text")))
     }
 
-  /** BM25's load-time artifacts — tf postings + additive side tables
-    * (df, doc set, per-doc length). Shared by fts_bm25 and the hybrid
-    * RRF retrieval query (queries.Pipeline).
+  /** The load-time tf postings plus their corpus stats side tables (df,
+    * doc set) — the one definition of these Catalog artifacts.
     */
-  def tfArtifacts(s: SparkSession, d: String)
-      : (DataFrame, FullText.TfStats, DataFrame) = {
+  def tfIndex(s: SparkSession, d: String): (DataFrame, FullText.TfStats) = {
     val tf = Catalog.table(s, d, "fts_tf_index") {
       FullText.buildTfIndex(
         Tables.load(s, d, "documents").select(col("doc_id").as("doc"), col("text")))
     }
-    val stats = FullText.TfStats(
+    (tf, FullText.TfStats(
       Catalog.table(s, d, "fts_tf_df") {
         tf.groupBy("term").agg(count_distinct(col("doc")).as("df")) },
-      Catalog.table(s, d, "fts_tf_docs") { tf.select("doc").distinct() })
+      Catalog.table(s, d, "fts_tf_docs") { tf.select("doc").distinct() }))
+  }
+
+  /** BM25's load-time artifacts — [[tfIndex]] plus the per-doc length
+    * table. Shared by fts_bm25 and the hybrid RRF retrieval query
+    * (queries.Pipeline).
+    */
+  def tfArtifacts(s: SparkSession, d: String)
+      : (DataFrame, FullText.TfStats, DataFrame) = {
+    val (tf, stats) = tfIndex(s, d)
     val dl = Catalog.table(s, d, "fts_doc_len") {
       tf.groupBy("doc").agg(sum(col("tf")).as("dl")) }
     (tf, stats, dl)
@@ -132,8 +139,9 @@ object AnalyticsSuite {
       // language-aware analysis (DefaultAnalyzerFactory): each doc
       // tokenizes with the analyzer its lang tag selects — en gets
       // stopwords + minimal plural stemming, de/fr/es their stopword
-      // lists over the unicode splitter, zh the CJK-bigram form — in ONE
-      // pass (a when-chain column, no per-language splits or shuffles)
+      // lists over the unicode splitter, zh the CJK-bigram form — as a
+      // union of one filtered branch per analyzer, which adds no shuffle
+      // (see FullText.tfPostingsByLang)
       FullText.tfPostingsByLang(
         Tables.load(s, d, "documents")
           .select(col("doc_id").as("doc"), col("text"), col("lang")))
@@ -146,14 +154,7 @@ object AnalyticsSuite {
       // corpus stats (N, df) are load-time side tables like the index
       // itself: a query touches postings only through the term filter and
       // the matched docs' norm rows, never a full-index aggregation.
-      val tf = Catalog.table(s, d, "fts_tf_index") {
-        FullText.buildTfIndex(
-          Tables.load(s, d, "documents").select(col("doc_id").as("doc"), col("text")))
-      }
-      val stats = FullText.TfStats(
-        Catalog.table(s, d, "fts_tf_df") {
-          tf.groupBy("term").agg(count_distinct(col("doc")).as("df")) },
-        Catalog.table(s, d, "fts_tf_docs") { tf.select("doc").distinct() })
+      val (tf, stats) = tfIndex(s, d)
       FullText.searchTf(tf, Seq("spark", "join", "fast"),
                         minCosine = 0.0, maxRank = 20, stats = Some(stats))
         .orderBy("rank")

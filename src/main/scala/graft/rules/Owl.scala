@@ -3,7 +3,7 @@ package graft.rules
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.rdf.Term
-import graft.util.Fixpoint
+import graft.util.{Bounded, Fixpoint}
 
 /** OWL property-axiom rules on top of the RDFS rule set — the subset the
   * reference's full-closure program covers beyond RDFS
@@ -170,25 +170,15 @@ object Owl {
   private val SameAsIri = OwlSameAs.SameAs
 
   /** Fact-count bound under which the (non-RDFS) OWL fixpoint runs as one
-    * driver pass over the collected ACTIVE subset instead of scheduled
-    * semi-naive rounds (each round = up to ~19 join branches + distinct +
-    * except + checkpoint — pure fixed overhead on schema-scale active
-    * sets). The same bounded-local discipline as the closure/CC fast paths
-    * (Paths.ClosureLocalMaxEdges, Graphs.CcLocalMaxEdges): explicit
-    * conf-overridable input bound, hard output cap with mid-fixpoint abort
-    * to the unchanged distributed loop, provably identical result (same
-    * rule set, same semi-naive round structure, set semantics). At corpus
-    * scale the active set exceeds the bound and the distributed fixpoint
-    * runs exactly as before.
+    * driver pass over the collected ACTIVE subset (see
+    * [[graft.util.Bounded]]) instead of semi-naive rounds of up to ~19
+    * join branches each, and the derived-fact cap past which that pass
+    * aborts to the distributed loop. Same rule set, same round structure,
+    * set semantics: the result is identical.
     */
   val OwlLocalMaxFactsConf = "spark.graft.owlLocalMaxFacts"
   val OwlLocalMaxFactsDefault = 1000000L
   val OwlLocalMaxDerived = 4000000L
-
-  /** What the last closure() on this JVM chose — observability for parity
-    * specs (mirrors Paths.lastClosureStrategy).
-    */
-  @volatile private[graft] var lastClosureStrategy: String = ""
 
   /** One OWL rule round: consequences with ≥1 premise in `delta`. */
   private[rules] def round(all: DataFrame, delta: DataFrame): DataFrame =
@@ -226,14 +216,15 @@ object Owl {
        col("o") === p(FunctionalProperty) || col("o") === p(InverseFunctionalProperty))
     // ONE bounded schema scan replaces the axiom-presence aggregate AND the
     // axiom-property lex scan (two further store-sized jobs before): the
-    // schema/axiom statements are schema-sized by assumption, guarded by
-    // limit(guard+1) against an adversarial store-sized axiom set — past
-    // the guard the code falls back to the unfiltered fixpoint, exactly
-    // the old axiomProps-returns-None behavior.
+    // schema/axiom statements are schema-sized by assumption, guarded
+    // against an adversarial store-sized axiom set — past the guard the
+    // code falls back to the unfiltered fixpoint, exactly the old
+    // axiomProps-returns-None behavior.
     val axiomGuard = 100000
-    val schemaRows = triples.filter(isSchema || axiomTyped)
-      .limit(axiomGuard + 1).collect()
-    val overflow = schemaRows.length > axiomGuard
+    val schema =
+      Bounded.collect(triples.filter(isSchema || axiomTyped), axiomGuard)
+    val overflow = schema.isEmpty
+    val schemaRows = schema.getOrElse(Array.empty[Row])
     def anyRow(f: Row => Boolean): Boolean = schemaRows.exists(f)
     def pIs(r: Row, iri: String): Boolean = isIriVal(r.get(1), iri)
     def typedAs(r: Row, cls: String): Boolean =
@@ -281,7 +272,7 @@ object Owl {
     if (rounds.isEmpty)
       return triples.distinct().withColumn("c", Term.unbound)
     def fix(facts: DataFrame): DataFrame = {
-      lastClosureStrategy = "distributed"
+      Bounded.note("owl", "distributed")
       Fixpoint.semiNaive(facts, maxIters) { (all, delta) =>
         rounds.map(r => r(all, delta)).reduce(_ unionByName _).distinct()
       }
@@ -309,56 +300,39 @@ object Owl {
         .unionByName(df.filter(axiomTyped).select(Term.lex(col("s")).as("l")))
         .unionByName(df.filter(col("p") === p(OnProperty))
           .select(Term.lex(col("o")).as("l")))
-      val rows = lexes.distinct().limit(axiomGuard + 1).collect()
-      if (rows.length > axiomGuard) None
-      else Some(rows.map(_.getString(0)).toSet)
+      Bounded.collect(lexes.distinct(), axiomGuard)
+        .map(_.map(_.getString(0)).toSet)
     }
     val isActive = isSchema || isType ||
       (if (props.isEmpty) lit(false) else Term.lex(col("p")).isin(props.toSeq: _*))
     val active = triples.filter(isActive)
-    val localMax = quads.sparkSession.conf.getOption(OwlLocalMaxFactsConf)
-      .map(_.toLong).getOrElse(OwlLocalMaxFactsDefault)
-    if (localMax > 0) {
-      // bounded probe straight off the scan (limit stops the collect at
-      // bound+1 rows, so an over-bound store pays a partial scan, not a
-      // full thrown-away job); duplicates in the un-distinct'd input are
-      // deduped by the fixpoint's set semantics on either path
-      val sample =
-        active.limit(math.min(localMax + 1, Int.MaxValue.toLong).toInt).collect()
-      if (sample.length <= localMax) {
-        localClosure(sample, maxIters,
-          inv = invOn, sym = symOn, trans = transOn, func = funcOn,
-          equiv = equivOn, hasval = hasvalOn)
-        match {
-          case Some(closedRows) =>
-            // metamodeling check, computed locally over the closed facts
-            // (same definition as axiomProps): derived axioms outside the
-            // static scope force the unfiltered distributed redo
-            if (localAxiomProps(closedRows).subsetOf(props)) {
-              lastClosureStrategy = "local"
-              val spark = quads.sparkSession
-              val closedDf = spark.createDataFrame(
-                spark.sparkContext.parallelize(closedRows), active.schema)
-              return triples.filter(!isActive).unionByName(closedDf)
-                .distinct().withColumn("c", Term.unbound)
-            } else return fix(triples).withColumn("c", Term.unbound)
-          case None => () // derived-fact cap hit — distributed loop below
-        }
-      }
-    }
-    val closedActive = fix(active)
+    val spark = quads.sparkSession
+    val bound = Bounded.bound(spark, OwlLocalMaxFactsConf, OwlLocalMaxFactsDefault)
     // metamodeling safety: if the fixpoint derived an axiom over a property
     // the static scope missed (e.g. a property equivalent to owl:
     // equivalentProperty deriving new schema), previously-inert facts could
     // become premises — redo unfiltered. Never fires on real ontologies.
-    // one final distinct (a derived fact can coincide with an inert base
-    // fact, e.g. an asserted sameAs the functional rule re-derives) —
-    // one full-store shuffle instead of one per round
-    val out =
+    // The local pass declines such a result, as it declines a derived-fact
+    // cap hit, and the distributed path decides again. One final distinct
+    // (a derived fact can coincide with an inert base fact, e.g. an
+    // asserted sameAs the functional rule re-derives) — one full-store
+    // shuffle instead of one per round.
+    Bounded.choose("owl", Bounded.collect(active, bound)) { sample =>
+      localClosure(sample, maxIters,
+          inv = invOn, sym = symOn, trans = transOn, func = funcOn,
+          equiv = equivOn, hasval = hasvalOn)
+        .filter(localAxiomProps(_).subsetOf(props))
+        .map { closedRows =>
+          val closedDf = spark.createDataFrame(
+            spark.sparkContext.parallelize(closedRows), active.schema)
+          triples.filter(!isActive).unionByName(closedDf).distinct()
+        }
+    } {
+      val closedActive = fix(active)
       if (axiomProps(closedActive).exists(_.subsetOf(props)))
         triples.filter(!isActive).unionByName(closedActive).distinct()
       else fix(triples)
-    out.withColumn("c", Term.unbound)
+    }.withColumn("c", Term.unbound)
   }
 
   // ------------------------------------------------------------------

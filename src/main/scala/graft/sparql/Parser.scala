@@ -118,13 +118,13 @@ object Parser {
           // against a store-sized declaration (the downstream isin literal
           // could not hold one either): fail loudly, never OOM
           val guard = 100000
-          val rows = quads
+          val rows = graft.util.Bounded.collect(quads
             .filter(col("p") === Term.iri("http://www.bigdata.com/rdf#virtualGraph") &&
                     Term.lex(col("s")) === vg)
-            .select(Term.lex(col("o"))).limit(guard + 1).collect()
-          require(rows.length <= guard,
+            .select(Term.lex(col("o"))), guard)
+          require(rows.isDefined,
             s"virtual graph <$vg> declares more than $guard members")
-          rows.map(_.getString(0)).toSeq
+          rows.get.map(_.getString(0)).toSeq
         }
         q0.copy(
           fromDefault = q0.fromDefault ++ q0.fromVirtualDefault.flatMap(members),

@@ -3,6 +3,7 @@ package graft.sparql
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.rdf.Term
+import graft.util.Bounded
 import Algebra._
 
 /** Property-path compilation and fixpoint evaluation.
@@ -331,29 +332,23 @@ object Paths {
     // relation (schema hierarchies, tiny property graphs) closes in one
     // driver BFS over the collected rows — the whole encode/loop/decode
     // apparatus (dict build + 4 broadcast joins + log D rounds of
-    // join/dedup/anti-join) is pure fixed overhead at that size. The
-    // collect is bounded twice: input rows via limit(bound+1) (reading
-    // the already-materialized checkpoint, so an over-bound relation
-    // pays a cheap partial read before falling through) and OUTPUT pairs
-    // via ClosureLocalMaxPairs (a dense closure aborts to the distributed
-    // loop mid-walk, so driver memory stays bounded even when E is small
-    // but E² is not).
-    if (!keyed) {
-      val localMax = edges.sparkSession.conf
-        .getOption(ClosureLocalMaxEdgesConf)
-        .map(_.toLong).getOrElse(ClosureLocalMaxEdgesDefault)
-      if (localMax > 0) {
-        val sample = e0.limit(math.min(localMax + 1, Int.MaxValue).toInt).collect()
-        if (sample.length <= localMax) {
-          localBfsClosure(sample, edges.sparkSession, e0.schema) match {
-            case Some(df) =>
-              lastClosureStrategy = "local"
-              return df
-            case None => () // output too dense — distributed loop below
-          }
-        }
-      }
+    // join/dedup/anti-join) is pure fixed overhead at that size
+    if (keyed) encodedClosure(e0, cols, keyed, maxIters)
+    else {
+      val spark = edges.sparkSession
+      val bound = Bounded.bound(spark, ClosureLocalMaxEdgesConf,
+                                ClosureLocalMaxEdgesDefault)
+      Bounded.choose("closure", Bounded.collect(e0, bound)) {
+        rows => localBfsClosure(rows, spark, e0.schema)
+      }(encodedClosure(e0, cols, keyed, maxIters))
     }
+  }
+
+  /** The distributed closure over deduped edges `e0`: dictionary-encode,
+    * run the chain or doubling loop on ids, decode.
+    */
+  private def encodedClosure(e0: DataFrame, cols: Seq[String], keyed: Boolean,
+                             maxIters: Int): DataFrame = {
     val dict = materialize(
       cols.map(c => e0.select(col(c).as("t"))).reduce(_ unionByName _)
         .distinct().withColumn("id", monotonically_increasing_id()))
@@ -374,12 +369,6 @@ object Paths {
         .drop(c, "id").withColumnRenamed(s"__$c", c)
     }.select(cols.map(col): _*)
   }
-
-  /** What the last closure evaluation on this JVM chose — observability for
-    * plan-guard specs ("a functional relation must take the chain path, no
-    * fixpoint rounds over the pair set").
-    */
-  @volatile private[graft] var lastClosureStrategy: String = ""
 
   /** Chain-shaped closure fast path. When the edge relation is FUNCTIONAL
     * in both directions (max out-degree 1 and max in-degree 1 — two cheap
@@ -409,21 +398,17 @@ object Paths {
     * closure pays output size); AQE skew-join splitting applies. Input `e`
     * must be materialized, distinct, (src: long, dst: long).
     */
-  /** Edge-count bound for solving the chain labeling on the driver; see
-    * the fast-path note inside [[chainClosure]]. Override with
-    * spark.graft.chainLocalMaxEdges.
+  /** Edge-count bound for solving the chain labeling on the driver (see
+    * [[graft.util.Bounded]] and the note inside [[chainClosure]]).
     */
   val ChainLocalMaxEdgesConf = "spark.graft.chainLocalMaxEdges"
   val ChainLocalMaxEdgesDefault = 2000000L
 
-  /** Edge-count bound for the general (non-chain) closure's driver BFS
-    * fast path, and the output-pair cap past which it aborts back to the
-    * distributed loop. The edge bound is deliberately tighter than the
-    * chain bound: a general closure's output can approach E², so the
-    * driver walk is only attempted on genuinely small relations (schema
-    * hierarchies, small property graphs) and the pair cap bounds memory
-    * when density bites anyway. Override with
-    * spark.graft.closureLocalMaxEdges.
+  /** Edge-count bound for the general (non-chain) closure's driver BFS,
+    * and the output-pair cap past which it aborts back to the distributed
+    * loop. The edge bound is tighter than the chain bound because a
+    * general closure's output can approach E²; the pair cap bounds driver
+    * memory when density bites anyway.
     */
   val ClosureLocalMaxEdgesConf = "spark.graft.closureLocalMaxEdges"
   val ClosureLocalMaxEdgesDefault = 65536L
@@ -477,9 +462,10 @@ object Paths {
     * is never reached from a head), matching the loop's giving-up path.
     * Input must be deduped (src: long, dst: long) with in/out-degree ≤ 1.
     */
-  private def localChainLabels(e: DataFrame): Option[DataFrame] = {
+  private def localChainLabels(spark: org.apache.spark.sql.SparkSession,
+                               rows: Array[org.apache.spark.sql.Row])
+      : Option[DataFrame] = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val rows = e.select(col("src").cast("long"), col("dst").cast("long")).collect()
     // primitive open-addressed structures (graft.util.LongLongMap/LongSet):
     // ~5x less driver heap than the boxed HashMap/HashSet/LinkedHashSet
     // these replaced, same conf'd bound — insertion order for the walk is
@@ -514,7 +500,6 @@ object Paths {
       }
     }
     if (labeled != nNodes) return None // unreached nodes = cycles
-    val spark = e.sparkSession
     Some(spark.createDataFrame(
       spark.sparkContext.parallelize(out.toIndexedSeq),
       StructType(Seq(StructField("n", LongType, nullable = false),
@@ -537,31 +522,36 @@ object Paths {
       .first()
     val (maxOut, maxIn, edgeCount) =
       (degRow.getLong(0), degRow.getLong(1), degRow.getLong(2))
-    if (maxOut > 1L || maxIn > 1L) {
-      lastClosureStrategy = "doubling"
-      return None
-    }
-    // bounded-size fast path (the CC discipline, Graphs.localComponents):
-    // below spark.graft.chainLocalMaxEdges the head/position labeling —
+    if (maxOut > 1L || maxIn > 1L) return None
+    // bounded-size fast path: below the bound the head/position labeling —
     // the part the jump rounds exist to compute — is a single driver walk
-    // over the collected functional edge list (O(edges) memory, two longs
-    // per row), and ONLY the labeling moves to the driver: the pair
-    // emission self-join, the part whose output is closure-sized, stays
-    // distributed. Past the bound the pointer-jump loop runs unchanged,
-    // so corpus-scale chains never touch the driver.
-    val localMax = e.sparkSession.conf.getOption(ChainLocalMaxEdgesConf)
-      .map(_.toLong).getOrElse(ChainLocalMaxEdgesDefault)
-    if (edgeCount <= localMax) return localChainLabels(e) match {
-      case Some(st) =>
-        lastClosureStrategy = "chain"
-        Some(st.as("a")
-          .join(st.as("b"),
-                col("a.ptr") === col("b.ptr") && col("a.pos") < col("b.pos"))
-          .select(col("a.n").as("src"), col("b.n").as("dst")))
-      case None => // a cycle: same verdict the unconverged loop reaches
-        lastClosureStrategy = "doubling"
-        None
+    // over the collected functional edge list, and ONLY the labeling moves
+    // to the driver: the pair emission self-join, the part whose output is
+    // closure-sized, stays distributed. The degree aggregate already gave
+    // the edge count, so no probe runs. Either labeling is None on a cycle
+    // (the local walk's verdict is final: no jump rounds after it).
+    val spark = e.sparkSession
+    val bound = Bounded.bound(spark, ChainLocalMaxEdgesConf,
+                              ChainLocalMaxEdgesDefault)
+    val rows = Option.when(Bounded.fits(edgeCount, bound))(
+      e.select(col("src").cast("long"), col("dst").cast("long")).collect())
+    val labels = Bounded.choose("chain", rows) {
+      r => Some(localChainLabels(spark, r))
+    }(jumpChainLabels(e, edgeCount, maxIters))
+    labels.map { st =>
+      Bounded.note("closure", "chain")
+      st.as("a")
+        .join(st.as("b"),
+              col("a.ptr") === col("b.ptr") && col("a.pos") < col("b.pos"))
+        .select(col("a.n").as("src"), col("b.n").as("dst"))
     }
+  }
+
+  /** (chain head, position) labels by distributed pointer jumping; None
+    * when the jumps do not converge (a cycle).
+    */
+  private def jumpChainLabels(e: DataFrame, edgeCount: Long,
+                              maxIters: Int): Option[DataFrame] = {
     // a chain of L edges converges in ceil(log2 L) jumps, so a loop still
     // unconverged past that bound has hit a cycle — give up THEN, not after
     // maxIters wasted rounds (also keeps pos ≤ 2·edges, far from long
@@ -591,26 +581,18 @@ object Paths {
                 (col("a.pos") + col("b.pos")).as("pos"))
       st = materialize(jumped)
       val cur = posSum(st)
-      if (cur.compareTo(last) == 0) {
-        // every pointer rests on a head → pure chains; emit pairs directly
-        lastClosureStrategy = "chain"
-        return Some(st.as("a")
-          .join(st.as("b"),
-                col("a.ptr") === col("b.ptr") && col("a.pos") < col("b.pos"))
-          .select(col("a.n").as("src"), col("b.n").as("dst")))
-      }
+      // every pointer rests on a head → pure chains
+      if (cur.compareTo(last) == 0) return Some(st)
       last = cur
       i += 1
     }
-    // never converged → at least one cycle; let the general loop handle it
-    lastClosureStrategy = "doubling"
-    None
+    None // never converged → at least one cycle
   }
 
   /** General-graph closure: exact-power-prefix doubling (below). */
   private def doublingClosure(enc: DataFrame, cols: Seq[String], keyed: Boolean,
                               maxIters: Int): DataFrame = {
-    lastClosureStrategy = "doubling"
+    Bounded.note("closure", "doubling")
     // Exact-power-prefix doubling over min-distance labels. Naive doubling
     // (freshall ∪ allfresh) rederives every length-L pair once per split
     // point — ~2^(r-1) copies per pair at round r, a ~100M-row intermediate

@@ -32,10 +32,10 @@ object OwlProf {
     t("quads")(graft.queries.RdfSuite.buildQuads(spark, sfDir).count())
     t("owlTransitive (load)")(
       SparkEntry.queries("owl_transitive_locatedin")(spark, sfDir).count())
-    println(s"[owlprof] strategy: ${graft.rules.Owl.lastClosureStrategy}")
+    println(s"[owlprof] strategy: ${graft.util.Bounded.strategy("owl")}")
     t("owlEquivalence (load)")(
       SparkEntry.queries("owl_equivalence_merge")(spark, sfDir).count())
-    println(s"[owlprof] strategy: ${graft.rules.Owl.lastClosureStrategy}")
+    println(s"[owlprof] strategy: ${graft.util.Bounded.strategy("owl")}")
     t("owlTransitive (query, warm)")(
       SparkEntry.queries("owl_transitive_locatedin")(spark, sfDir).count())
     t("owlEquivalence (query, warm)")(

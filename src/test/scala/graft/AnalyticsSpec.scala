@@ -6,6 +6,7 @@ import graft.gas.Graphs
 import graft.rdf.{NTriples, Term}
 import graft.rules.RDFS
 import graft.search.FullText
+import graft.util.Bounded
 
 /** Unit semantics for inference, search, and graph analytics on tiny
   * hand-computed fixtures.
@@ -102,12 +103,23 @@ class AnalyticsSpec extends SparkSpecBase {
     val e = undirected(chain ++ Seq(100L -> 101L, 101L -> 102L): _*)
     val local = Graphs.connectedComponents(e)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(Bounded.strategy("cc") == "local")
     spark.conf.set(Graphs.CcLocalMaxEdgesConf, "0")
     try {
       val dist = Graphs.connectedComponents(e)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(Bounded.strategy("cc") == "distributed")
       assert(dist == local)
       assert((10L to 40L).forall(dist(_) == 10L))
+    } finally spark.conf.unset(Graphs.CcLocalMaxEdgesConf)
+  }
+
+  test("connected components: bound 0 takes the distributed loop even on " +
+       "an empty edge frame") {
+    spark.conf.set(Graphs.CcLocalMaxEdgesConf, "0")
+    try {
+      assert(Graphs.connectedComponents(edgesOf()).collect().isEmpty)
+      assert(Bounded.strategy("cc") == "distributed")
     } finally spark.conf.unset(Graphs.CcLocalMaxEdgesConf)
   }
 
@@ -120,9 +132,11 @@ class AnalyticsSpec extends SparkSpecBase {
     def run(): Map[Long, Long] = Graphs.bfs(e, srcs, 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val local = run()
+    assert(Bounded.strategy("bfs") == "local")
     spark.conf.set(Graphs.GraphLocalMaxEdgesConf, "0")
     try {
       val dist = run()
+      assert(Bounded.strategy("bfs") == "distributed")
       assert(dist == local)
       assert(local == Map(1L -> 0L, 999L -> 0L, 2L -> 1L, 3L -> 1L,
                           4L -> 2L, 5L -> 3L)) // 6 beyond the cap
@@ -141,18 +155,22 @@ class AnalyticsSpec extends SparkSpecBase {
     def run(): Map[Long, Long] = Graphs.sssp(e, 1L, 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val local = run()
+    assert(Bounded.strategy("sssp") == "local")
     spark.conf.set(Graphs.GraphLocalMaxEdgesConf, "0")
     try {
       val dist = run()
+      assert(Bounded.strategy("sssp") == "distributed")
       assert(dist == local)
       assert(local == Map(1L -> 0L, 2L -> 3L, 3L -> 1L, 4L -> 2L, 5L -> 8L))
     } finally spark.conf.unset(Graphs.GraphLocalMaxEdgesConf)
     // source outside the graph: both paths emit exactly the depth-0 row
     val lone = Graphs.sssp(e, 42L, 3).collect()
+    assert(Bounded.strategy("sssp") == "local")
     assert(lone.length == 1 && lone(0).getLong(0) == 42L && lone(0).getLong(1) == 0L)
     spark.conf.set(Graphs.GraphLocalMaxEdgesConf, "0")
     try {
       val loneD = Graphs.sssp(e, 42L, 3).collect()
+      assert(Bounded.strategy("sssp") == "distributed")
       assert(loneD.length == 1 && loneD(0).getLong(0) == 42L && loneD(0).getLong(1) == 0L)
     } finally spark.conf.unset(Graphs.GraphLocalMaxEdgesConf)
   }
@@ -164,9 +182,11 @@ class AnalyticsSpec extends SparkSpecBase {
     def run(): Map[Long, Long] = Graphs.pagerank(e, 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val local = run()
+    assert(Bounded.strategy("pagerank") == "local")
     spark.conf.set(Graphs.GraphLocalMaxEdgesConf, "0")
     try {
       val dist = run()
+      assert(Bounded.strategy("pagerank") == "distributed")
       assert(dist == local)
       assert(local.keySet == Set(1L, 2L, 3L, 4L))
       // integer semantics sanity: 2 and 4 each receive exactly half of

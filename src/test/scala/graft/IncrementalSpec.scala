@@ -189,13 +189,13 @@ class IncrementalSpec extends SparkSpecBase {
       s"""<${EX}d1> <${EX}pages> "12" ."""))
     val local = Owl.closure(base)
     local.collect()
-    assert(Owl.lastClosureStrategy == "local",
+    assert(graft.util.Bounded.strategy("owl") == "local",
       "the default bound must take the driver-local fixpoint on this store")
     spark.conf.set(Owl.OwlLocalMaxFactsConf, "0")
     try {
       val dist = Owl.closure(base)
       dist.collect()
-      assert(Owl.lastClosureStrategy == "distributed",
+      assert(graft.util.Bounded.strategy("owl") == "distributed",
         "bound 0 must force the scheduled semi-naive fixpoint")
       assert(local.except(dist).isEmpty && dist.except(local).isEmpty,
         "local and distributed OWL closures diverged")

@@ -841,13 +841,15 @@ class PipelineSpec extends SparkSpecBase {
     assert(ranks == Seq(1L, 2L, 3L))
     // the driver-side fast path (size-guarded) and the distributed loop
     // are the same integer arithmetic: picks must be bit-identical
-    def rows(driverMax: Int) =
-      Retrieval.mmrDiversify(fix, cands, select = 3, lambdaPct = 20,
-                             driverMax = driverMax)
-        .orderBy("q_id", "sel_rank").collect()
+    def rows(driverMax: Int, path: String) = {
+      val out = Retrieval.mmrDiversify(fix, cands, select = 3, lambdaPct = 20,
+                                       driverMax = driverMax)
+      assert(graft.util.Bounded.strategy("mmr") == path)
+      out.orderBy("q_id", "sel_rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
                    r.getLong(3), r.getLong(4))).toSeq
-    assert(rows(driverMax = 100000) == rows(driverMax = 0))
+    }
+    assert(rows(driverMax = 100000, "local") == rows(driverMax = 0, "distributed"))
   }
 
   test("mmr guard bounds the candidate frame, not just pairs; int ids work") {
@@ -863,14 +865,15 @@ class PipelineSpec extends SparkSpecBase {
     ).toDF("q_id", "vec_id", "score")
     // driverMax below the 40-row candidate frame: the distributed loop
     // must produce the same single pick per query the fast path would
-    val viaDistributed = Retrieval.mmrDiversify(emb, soloCands, select = 1,
-        lambdaPct = 50, driverMax = 10)
-      .orderBy("q_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val viaDriver = Retrieval.mmrDiversify(emb, soloCands, select = 1,
-        lambdaPct = 50, driverMax = 100000)
-      .orderBy("q_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    def picks(driverMax: Int, path: String) = {
+      val out = Retrieval.mmrDiversify(emb, soloCands, select = 1,
+                                       lambdaPct = 50, driverMax = driverMax)
+      assert(graft.util.Bounded.strategy("mmr") == path)
+      out.orderBy("q_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    }
+    val viaDistributed = picks(driverMax = 10, "distributed")
+    val viaDriver = picks(driverMax = 100000, "local")
     assert(viaDistributed == viaDriver)
     assert(viaDriver.length == 40 && viaDriver.forall(_._2 == 1L))
     // an IntegerType candidate frame must not ClassCastException on the
@@ -882,11 +885,14 @@ class PipelineSpec extends SparkSpecBase {
     val intEmb = spark.createDataFrame(
       Seq((1L, Seq(1.0, 0.0)), (2L, Seq(1.0, 0.01)), (3L, Seq(0.5, 0.866)))
     ).toDF("vec_id", "embedding")
-    def ranked(driverMax: Int) =
-      Retrieval.mmrDiversify(intEmb, intCands, select = 2, lambdaPct = 20,
-                             driverMax = driverMax)
-    val fast = ranked(100000)
-    val dist = ranked(0)
+    def ranked(driverMax: Int, path: String) = {
+      val out = Retrieval.mmrDiversify(intEmb, intCands, select = 2,
+                                       lambdaPct = 20, driverMax = driverMax)
+      assert(graft.util.Bounded.strategy("mmr") == path)
+      out
+    }
+    val fast = ranked(100000, "local")
+    val dist = ranked(0, "distributed")
     assert(fast.schema == dist.schema)
     assert(fast.orderBy("sel_rank").collect().map(_.getLong(2)).toSeq ==
            dist.orderBy("sel_rank").collect().map(_.getLong(2)).toSeq)

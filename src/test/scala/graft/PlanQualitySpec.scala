@@ -514,7 +514,7 @@ class PlanQualitySpec extends SparkSpecBase {
                             cyc -> cycExpect)) {
       assert(Paths.transitiveClosure(e).as[(Long, Long)].collect().toSet
                == expect)
-      assert(Paths.lastClosureStrategy == "local",
+      assert(graft.util.Bounded.strategy("closure") == "local",
              "small relation must close on the driver")
     }
 
@@ -526,16 +526,18 @@ class PlanQualitySpec extends SparkSpecBase {
     try {
       assert(Paths.transitiveClosure(chains).as[(Long, Long)].collect().toSet
                == chainExpect)
-      assert(Paths.lastClosureStrategy == "chain",
+      assert(graft.util.Bounded.strategy("closure") == "chain",
              "max-degree-1 relation must take the chain fast path")
+      assert(graft.util.Bounded.strategy("chain") == "distributed",
+             "chain bound 0 must label by pointer jumping")
       assert(Paths.transitiveClosure(tree).as[(Long, Long)].collect().toSet
                == treeExpect)
-      assert(Paths.lastClosureStrategy == "doubling")
+      assert(graft.util.Bounded.strategy("closure") == "doubling")
       // a functional CYCLE has no head: pointer jumping detects it within
       // ceil(log2 E)+2 rounds and falls back to doubling, which closes it
       assert(Paths.transitiveClosure(cyc).as[(Long, Long)].collect().toSet
                == cycExpect)
-      assert(Paths.lastClosureStrategy == "doubling")
+      assert(graft.util.Bounded.strategy("closure") == "doubling")
     } finally {
       spark.conf.unset(Paths.ClosureLocalMaxEdgesConf)
       spark.conf.unset(Paths.ChainLocalMaxEdgesConf)
