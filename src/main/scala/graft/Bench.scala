@@ -1,19 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.requiredConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm-up (not measured as query time): JIT + codegen + parquet footer
-    // caches, so the first measured query isn't charged JVM start-of-life
+    val spark = Tables.session()
+    // warm-up (not measured as query time): JIT, codegen and parquet footer
+    // caches, so the first measured query isn't charged JVM start-of-life.
+    // Its generated classes last until the measured queries only because
+    // requiredConfs sizes Spark's codegen cache: at the default 100 entries
+    // the load phase evicted them first
     try SparkEntry.queries("values_in")(spark, sfDir).count()
     catch { case _: Throwable => }
     try SparkEntry.queries("agg_minmax")(spark, sfDir).count()

@@ -19,12 +19,41 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Session config required to read the driver's parquet: `events.ts` is
-    * TIMESTAMP(NANOS), which Spark only reads as a long (nanos since epoch).
-    * `load` converts it back to a timestamp column.
+  /** The session confs the engine depends on; [[session]] applies them.
+    *
+    *  - `spark.sql.legacy.parquet.nanosAsLong`: `events.ts` is
+    *    TIMESTAMP(NANOS), which Spark only reads as a long (nanos since
+    *    epoch). `load` converts it back to a timestamp column.
+    *  - `spark.sql.codegen.cache.maxEntries`: Spark's generated-class cache
+    *    is one JVM-wide LRU, sized by this static conf when the first class
+    *    compiles. At the default of 100, a pass of the endpoint or the
+    *    analytics batch (about 330 distinct whole-stage classes) evicts
+    *    every class before it comes round again, so each warm pass
+    *    recompiles nearly all of them. One whole run compiles at most
+    *    about 400 distinct classes; 1000 is 2.5x that. An entry (retained
+    *    source key plus bytecode) holds about 27 KB of live heap, so the cap
+    *    bounds the cache at about 27 MB.
     */
-  val requiredConfs: Map[String, String] =
-    Map("spark.sql.legacy.parquet.nanosAsLong" -> "true")
+  val requiredConfs: Map[String, String] = Map(
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
+
+  /** The engine's session: `local[cpus]` with one shuffle partition per
+    * core, UTC, no UI, and [[requiredConfs]]. `cpus` defaults to
+    * `SPARK_GRAFT_CPUS`, else 4.
+    */
+  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
+              logLevel: String = "WARN"): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config(requiredConfs)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")

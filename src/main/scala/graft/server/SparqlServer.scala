@@ -4,6 +4,8 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -50,7 +52,8 @@ import graft.sparql.{Parser, Results, Update}
   *   GET  /status?showQueries     one line per in-flight query/update
   *   GET/POST /status?cancelQuery&queryId=<id>   terminate a running query
   *   GET  /counters               engine counters (queries/updates/aborts,
-  *                                uptime, cache sizes) as JSON
+  *                                uptime, cache sizes, JVM-wide codegen
+  *                                compiles and compile ms) as JSON
   *
   * Multi-tenancy (the MultiTenancyServlet surface,
   * /root/reference/bigdata-sails/src/java/com/bigdata/rdf/sail/webapp/
@@ -348,14 +351,18 @@ class SparqlServer(spark: SparkSession, initial: DataFrame, port: Int = 0,
             s""""runningQueries":${running.size}}""")
     })
     // performance counters (CountersServlet.java:48): the engine-level
-    // counts — queries/updates served, aborts, cache sizes, uptime
+    // counts — queries/updates served, aborts, cache sizes, uptime — plus
+    // the JVM's codegen compile totals, where a generated-class cache miss
+    // on a repeated query shape shows up as compiles that keep growing
     server.createContext("/counters", (ex: HttpExchange) => safely(ex) {
       respond(ex, 200, "application/json",
         s"""{"uptimeMs":${System.currentTimeMillis() - startedAtMs},""" +
           s""""queries":${nQueries.get()},"updates":${nUpdates.get()},""" +
           s""""aborted":${nAborted.get()},"running":${running.size},""" +
           s""""namespaces":${namespaceNames.size},""" +
-          s""""describeCacheEntries":${describeCache.size}}""")
+          s""""describeCacheEntries":${describeCache.size},""" +
+          s""""codegenCompiles":${CodegenMetrics.METRIC_COMPILATION_TIME.getCount},""" +
+          s""""codegenCompileMs":${CodeGenerator.compileTime / 1000000}}""")
     })
     // linked-data GET (RESTServlet.java:132-170): /ld?uri=<iri> → DESCRIBE.
     // CBDs cache per IRI (DescribeCache.java's job) keyed on the store

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -14,15 +13,7 @@ object BuildPlans {
   def main(args: Array[String]): Unit = {
     val outDir = Paths.get(args(0))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.requiredConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.session(logLevel = "ERROR")
     Files.createDirectories(outDir)
     def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       val txt = df.queryExecution.explainString(

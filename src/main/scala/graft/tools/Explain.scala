@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.{SparkEntry, Tables}
 
 /** Dev tool: dump `.explain("formatted")` for named SparkEntry queries to
@@ -23,15 +22,7 @@ object Explain {
       if (args.length > 2) args(2).split(",").toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.requiredConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.session(logLevel = "ERROR")
     Files.createDirectories(outDir)
     names.foreach { name =>
       val txt =

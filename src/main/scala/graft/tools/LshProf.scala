@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
@@ -16,15 +16,7 @@ object LshProf {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val runs = if (args.length > 1) args(1).toInt else 4
     val planes = 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.requiredConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session()
     import graft.pipeline.Similarity.{lshBucketCol, planeComponent}
     val emb = Tables.load(spark, sfDir, "embeddings")
     val e = emb.select(col("vec_id"),

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.{SparkEntry, Tables}
 
 /** Dev probe: time the two OWL closure load steps exactly as the bench's
@@ -11,15 +10,7 @@ import graft.{SparkEntry, Tables}
 object OwlProf {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.requiredConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session()
     // A/B the bounded-local vs distributed fixpoint at any scale
     sys.env.get("SPARK_GRAFT_OWL_LOCAL_MAX").foreach(v =>
       spark.conf.set(graft.rules.Owl.OwlLocalMaxFactsConf, v))

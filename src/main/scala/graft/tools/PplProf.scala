@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.Tables
 
 /** Dev probe (the WarcProf discipline): isolates pplBuckets' BUCKETING
   * stage from the (dominant at bench scale) cross-entropy scoring, on a
@@ -15,11 +15,7 @@ import org.apache.spark.sql.types.LongType
 object PplProf {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 100000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session()
     // synthetic per-document score frame: ONE dominant language, rounded
     // 6dp scores over a ~7-nat range (ppl-bucket reality)
     val scored = spark.range(n).select(

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Tables
 
 /** Dev probe (the WarcProf discipline): times each temporal-suite entry
   * at an arbitrary sf dir and prints the funnel's final physical plan —
@@ -12,14 +12,7 @@ object TemporalProf {
     val dir = args(0)
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.Tables.requiredConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session()
     for ((name, fn) <- graft.queries.TemporalSuite.queries.toSeq.sortBy(_._1)
          if only.forall(_.contains(name))) {
       val df = fn(spark, dir)

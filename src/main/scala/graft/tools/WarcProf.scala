@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.sources.Warc
 
 /** Dev throughput probe for the WARC ingestion source (the [[Prof]]
@@ -19,13 +19,7 @@ object WarcProf {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val runs = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session()
     val nShards = spark.read.format("binaryFile").load(dir).count()
     for (i <- 1 to runs) {
       val t0 = System.nanoTime()

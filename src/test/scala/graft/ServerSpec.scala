@@ -150,6 +150,27 @@ class ServerSpec extends SparkSpecBase {
     } finally srv.stop()
   }
 
+  test("counters: a repeated SELECT compiles no new codegen classes") {
+    val quads = parse(Seq(
+      s"""<${EX}alice> <${EX}worksFor> <${EX}acme> .""",
+      s"""<${EX}bob> <${EX}worksFor> <${EX}acme> ."""))
+    val srv = new SparqlServer(spark, quads).start()
+    try {
+      val base = s"http://127.0.0.1:${srv.boundPort}"
+      val q = s"PREFIX ex: <$EX> SELECT ?x WHERE { ?x ex:worksFor ex:acme } ORDER BY ?x"
+      def compiles(): Long = {
+        val (c, body) = http("GET", s"$base/counters")
+        assert(c == 200 && body.contains("\"codegenCompileMs\":"), s"counters: $body")
+        "\"codegenCompiles\":(\\d+)".r.findFirstMatchIn(body).get.group(1).toLong
+      }
+      assert(http("GET", s"$base/sparql?query=${enc(q)}")._1 == 200)
+      val before = compiles()
+      val (c2, json) = http("GET", s"$base/sparql?query=${enc(q)}")
+      assert(c2 == 200 && json.contains(EX + "bob"))
+      assert(compiles() == before, "the repeated SELECT recompiled generated classes")
+    } finally srv.stop()
+  }
+
   test("query lifecycle: timeout and cancelQuery kill running Spark jobs") {
     // slow-query shape: (p)+ closure over a 4000-node chain — a DRIVER-SIDE
     // fixpoint of ~12 short Spark jobs (several seconds total), so a cancel
