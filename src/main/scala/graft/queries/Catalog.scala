@@ -22,7 +22,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Catalog {
 
-  private val built = scala.collection.concurrent.TrieMap.empty[(String, String), String]
+  /** One artifact: its parquet path, written by the first `path` read.
+    * The lazy val holds concurrent first users until the one build is
+    * done; a build that throws leaves it unbuilt.
+    */
+  private final class Artifact(val target: String, build: () => DataFrame) {
+    lazy val path: String = { build().write.mode("overwrite").parquet(target); target }
+  }
+
+  private val built = scala.collection.concurrent.TrieMap.empty[(String, String), Artifact]
 
   private lazy val root: String = {
     val pid = ProcessHandle.current().pid()
@@ -41,14 +49,20 @@ object Catalog {
     dir
   }
 
-  /** Return the memoized parquet-backed table, building it on first use. */
+  /** Return the memoized parquet-backed table, building it on first use.
+    * Concurrent first uses of one key build it once; a build that throws
+    * is forgotten, so the next call builds again.
+    */
   def table(spark: SparkSession, dir: String, name: String)
            (build: => DataFrame): DataFrame = {
-    val path = built.getOrElseUpdate((dir, name), {
-      val p = s"$root/${Integer.toHexString(dir.hashCode)}/$name"
-      build.write.mode("overwrite").parquet(p)
-      p
-    })
+    val key = (dir, name)
+    // the map may construct a losing Artifact under a race; only the
+    // entered one is ever built
+    val artifact = built.getOrElseUpdate(key,
+      new Artifact(s"$root/${Integer.toHexString(dir.hashCode)}/$name", () => build))
+    val path =
+      try artifact.path
+      catch { case e: Throwable => built.remove(key, artifact); throw e }
     spark.read.parquet(path)
   }
 
@@ -57,8 +71,8 @@ object Catalog {
     */
   def drop(dir: String): Unit =
     built.keys.filter(_._1 == dir).foreach { k =>
-      built.remove(k).foreach { path =>
-        val p = java.nio.file.Paths.get(path)
+      built.remove(k).foreach { artifact =>
+        val p = java.nio.file.Paths.get(artifact.target)
         if (java.nio.file.Files.exists(p))
           java.nio.file.Files.walk(p)
             .sorted(java.util.Comparator.reverseOrder())

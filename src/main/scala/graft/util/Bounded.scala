@@ -69,4 +69,13 @@ object Bounded {
 
   /** What the last evaluation at `site` on this JVM chose ("" if none). */
   def strategy(site: String): String = record.getOrDefault(site, "")
+
+  /** Every site recorded since the last drain, with its strategy; clears
+    * the record.
+    */
+  def drain(): Map[String, String] = {
+    val out = Map.newBuilder[String, String]
+    record.keySet.forEach(site => Option(record.remove(site)).foreach(out += site -> _))
+    out.result()
+  }
 }

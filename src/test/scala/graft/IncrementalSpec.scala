@@ -187,19 +187,47 @@ class IncrementalSpec extends SparkSpecBase {
       s"<${EX}club> <${EX}memberOf> <${EX}federation> .",
       // inert facts must survive both paths untouched
       s"""<${EX}d1> <${EX}pages> "12" ."""))
-    val local = Owl.closure(base)
-    local.collect()
-    assert(graft.util.Bounded.strategy("owl") == "local",
-      "the default bound must take the driver-local fixpoint on this store")
-    spark.conf.set(Owl.OwlLocalMaxFactsConf, "0")
-    try {
-      val dist = Owl.closure(base)
-      dist.collect()
-      assert(graft.util.Bounded.strategy("owl") == "distributed",
-        "bound 0 must force the scheduled semi-naive fixpoint")
-      assert(local.except(dist).isEmpty && dist.except(local).isEmpty,
-        "local and distributed OWL closures diverged")
-    } finally spark.conf.unset(Owl.OwlLocalMaxFactsConf)
+    // the default iteration cap, then caps that cut the fixpoint short:
+    // both executors derive the same fact set in every round
+    val sizes = for (maxIters <- Seq(32, 1, 2)) yield {
+      val local = Owl.closure(base, maxIters)
+      local.collect()
+      assert(graft.util.Bounded.strategy("owl") == "local",
+        "the default bound must take the driver-local fixpoint on this store")
+      spark.conf.set(Owl.OwlLocalMaxFactsConf, "0")
+      try {
+        val dist = Owl.closure(base, maxIters)
+        dist.collect()
+        assert(graft.util.Bounded.strategy("owl") == "distributed",
+          "bound 0 must force the scheduled semi-naive fixpoint")
+        assert(local.except(dist).isEmpty && dist.except(local).isEmpty,
+          s"local and distributed OWL closures diverged at maxIters=$maxIters")
+      } finally spark.conf.unset(Owl.OwlLocalMaxFactsConf)
+      local.count()
+    }
+    assert(sizes(1) < sizes(0), s"one round must cut the fixpoint short: $sizes")
+  }
+
+  test("OWL closure: an axiom derived over an axiom property fires its rule") {
+    import graft.rules.Owl
+    // myInv is equivalent to owl:inverseOf, so (x myInv y) derives
+    // (x inverseOf y): no inverseOf axiom is asserted, yet prp-inv1 must
+    // turn (a x b) into (b y a)
+    val base = parse(Seq(
+      s"<${EX}myInv> <${Owl.EquivalentProperty}> <${Owl.InverseOf}> .",
+      s"<${EX}x> <${EX}myInv> <${EX}y> .",
+      s"<${EX}a> <${EX}x> <${EX}b> ."))
+    for (bound <- Seq(None, Some("0"))) {
+      bound.foreach(spark.conf.set(Owl.OwlLocalMaxFactsConf, _))
+      try {
+        val closed = Owl.closure(base)
+        def has(s: String, p: String, o: String) =
+          !closed.filter(col("s") === Term.iri(s) && col("p") === Term.iri(p) &&
+                         col("o") === Term.iri(o)).isEmpty
+        assert(has(EX + "x", Owl.InverseOf, EX + "y"), s"bound $bound")
+        assert(has(EX + "b", EX + "y", EX + "a"), s"bound $bound")
+      } finally spark.conf.unset(Owl.OwlLocalMaxFactsConf)
+    }
   }
 
   test("axiomatic RDFS closure: rdf1/rdfs4/6/8/10/12/13 on request") {
