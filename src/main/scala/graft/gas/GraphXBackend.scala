@@ -1,7 +1,7 @@
 package graft.gas
 
 import org.apache.spark.graphx.{Edge, Graph, Pregel, VertexId}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 /** GraphX-backed analytics — the Pregel-model execution of the same GAS
@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * everything in Catalyst/AQE land and is the default; this backend runs on
   * GraphX's Pregel machinery — vertex-partitioned RDDs — which wins when the
   * algorithm is long-running and vertex state is hot (no per-round plan
-  * re-derivation).
+  * re-derivation). It serves the declared graphx_cc and graphx_bfs_hops.
   */
 object GraphXBackend {
 
@@ -24,18 +24,13 @@ object GraphXBackend {
     edges.select("src", "dst").queryExecution.toRdd
       .map(r => Edge(r.getLong(0), r.getLong(1), 1))
 
-  private def toDf(spark: SparkSession, rows: org.apache.spark.rdd.RDD[Row],
-                   schema: StructType): DataFrame =
-    spark.createDataFrame(rows, schema)
-
   /** Connected components: component = lowest vertex id (same contract as
     * Graphs.connectedComponents).
     */
   def connectedComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
     val g = Graph.fromEdges(toEdgeRdd(edges), defaultValue = 0)
     val cc = g.connectedComponents().vertices.map { case (v, c) => Row(v, c) }
-    toDf(spark, cc, StructType(Seq(
+    edges.sparkSession.createDataFrame(cc, StructType(Seq(
       StructField("node", LongType), StructField("component", LongType))))
   }
 
@@ -50,7 +45,6 @@ object GraphXBackend {
     * same fixpoint, bit-identical (node, depth) rows.
     */
   def hopDistances(edges: DataFrame, source: Long): DataFrame = {
-    val spark = edges.sparkSession
     val Inf = Long.MaxValue
     val g = Graph.fromEdges(toEdgeRdd(edges), defaultValue = 0)
       .mapVertices((v, _) => if (v == source) 0L else Inf)
@@ -61,18 +55,7 @@ object GraphXBackend {
            else Iterator.empty,
       (a, b) => math.min(a, b)).vertices
       .flatMap { case (v, d) => if (d != Inf) Some(Row(v, d)) else None }
-    toDf(spark, sp, StructType(Seq(
+    edges.sparkSession.createDataFrame(sp, StructType(Seq(
       StructField("node", LongType), StructField("depth", LongType))))
-  }
-
-  /** Static PageRank (GraphX's float implementation; for the bit-exact
-    * cross-engine variant use Graphs.pagerank).
-    */
-  def pagerank(edges: DataFrame, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val g = Graph.fromEdges(toEdgeRdd(edges), defaultValue = 0)
-    val pr = g.staticPageRank(iters).vertices.map { case (v, r) => Row(v, r) }
-    toDf(spark, pr, StructType(Seq(
-      StructField("node", LongType), StructField("rank", DoubleType))))
   }
 }

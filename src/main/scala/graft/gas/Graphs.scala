@@ -7,17 +7,34 @@ import graft.util.Bounded
 import graft.util.Fixpoint.{materialize, materializeKeyed}
 
 /** Graph analytics over edge DataFrames — the GAS layer's programs
-  * (reference: /root/reference/bigdata-gas/src/java/com/bigdata/rdf/graph/
-  * analytics/{BFS,SSSP,CC,PR}.java over the IGASProgram gather/apply/scatter
-  * API, IGASProgram.java:107-183) re-expressed as iterative DataFrame jobs.
+  * (reference: bigdata-gas/src/java/com/bigdata/rdf/graph/analytics/
+  * {BFS,SSSP,CC,PR}.java over the IGASProgram gather/apply/scatter API,
+  * IGASProgram.java:107-183).
   *
   * Edges: (src: BIGINT, dst: BIGINT [, weight: BIGINT]). Directed; pass both
   * directions for undirected semantics.
   *
-  * Determinism: PageRank uses scaled *integer* arithmetic (rank units of
-  * 1e-12) with floor division — no floating-point accumulation order
-  * dependence, so results are bit-identical across partitionings, replays,
-  * and external oracles.
+  * BFS, SSSP and PageRank are each one [[VertexProgram]] value (Pregelix's
+  * init/message/combine/apply): edge weight, message, combiner, apply step,
+  * seeds and round cap. Two executors read it, and `Bounded.choose` picks
+  * by edge count: [[runLocal]] on the driver (dense ids, Long arrays) and
+  * [[runDistributed]] (one join plus one groupBy per superstep). The
+  * combiner sets the round shape on both. A `min` program runs semi-naive:
+  * only vertices whose value dropped last round send, each relaxation reads
+  * the previous round's value, and the loop stops at the cap or an empty
+  * frontier — after r rounds that is hop-capped Bellman-Ford, exactly. A
+  * `sum` program sends from every vertex for exactly its round count.
+  *
+  * Connected components is two algorithms chosen by input size, not one
+  * program: a driver union-find, or pointer-jumping label rounds. Those
+  * rounds stay full-frame instead of semi-naive because pointer jumping
+  * reads every label (see [[connectedComponents]]).
+  *
+  * Determinism: every program is exact integer arithmetic (PageRank in
+  * scaled integer units with floor division), so results are bit-identical
+  * across executors, partitionings, replays and external oracles. Overflow
+  * throws ArithmeticException on both executors: `Math.addExact` and
+  * `multiplyExact` on the driver, ANSI mode on Spark.
   *
   * Scale posture: each round is one shuffle keyed by vertex; frontiers and
   * state are checkpointed per round (O(1) lineage); aggregation is
@@ -26,32 +43,12 @@ import graft.util.Fixpoint.{materialize, materializeKeyed}
   */
 object Graphs {
 
-  /** BFS: minimum hop count from the source set, up to maxDepth. */
-  /** Loop-invariant edge relation, deduped and checkpointed WITH
-    * HashPartitioning(src) preserved: every round of every iterative
-    * program here joins frontier/label state against `src`, so keeping the
-    * edge frame pre-partitioned removes the edge-sized exchange from every
-    * round — at corpus scale the edge frame is the heavy side of those
-    * joins. The repartition lands before dropDuplicates: (src) partitioning
-    * satisfies the (src, dst) clustering the dedup needs (equal pairs share
-    * src), so the dedup adds no second exchange.
-    */
-  private def keyedEdges(edges: DataFrame, cols: String*): DataFrame =
-    materializeKeyed(
-      edges.select(cols.head, cols.tail: _*)
-        .repartition(col("src")).dropDuplicates("src", "dst"))
-
-  /** Edge-count bound for the driver-local bfs/sssp/pagerank passes (see
+  /** Edge-count bound for the driver executor of bfs/sssp/pagerank (see
     * [[graft.util.Bounded]]; 2M edges are tens of MB in int/long arrays).
-    * All three programs are exact integer computations (min-hop,
-    * min-weight, scaled-integer rank), so the two paths are bit-identical.
-    * Like localComponents, the local path emits LongType node ids.
+    * Like localComponents, the driver executor emits LongType node ids.
     */
   val GraphLocalMaxEdgesConf = "spark.graft.graphLocalMaxEdges"
   val GraphLocalMaxEdgesDefault = 2000000L
-
-  private def graphBound(spark: SparkSession): Int =
-    Bounded.bound(spark, GraphLocalMaxEdgesConf, GraphLocalMaxEdgesDefault)
 
   /** The edge frame as the local passes read it: long endpoints, then
     * `more` columns as they are.
@@ -60,251 +57,251 @@ object Graphs {
     e.select(Seq(col("src").cast(LongType), col("dst").cast(LongType)) ++
              more.map(col): _*)
 
-  /** Dense node→index assignment over collected edge endpoints (driver
-    * fast paths): primitive map + flat id array, no boxing.
-    */
-  private final class NodeIndex(expected: Int) {
-    private val map = new graft.util.LongLongMap(expected)
-    var nodes = new Array[Long](math.max(16, expected))
-    var n = 0
-    def id(node: Long): Int = {
-      val v = map.getOrDefault(node, -1L)
-      if (v >= 0L) v.toInt
-      else {
-        if (n == nodes.length) nodes = java.util.Arrays.copyOf(nodes, n * 2)
-        nodes(n) = node; map.put(node, n.toLong); n += 1; n - 1
-      }
-    }
-    /** Index of `node`, or -1 when unseen. */
-    def lookup(node: Long): Int = map.getOrDefault(node, -1L).toInt
-  }
-
-  /** Dense ids for collected edge rows: the node index (ids assigned in
-    * row order, src before dst) plus each edge's src and dst id.
-    */
-  private def indexEdges(eRows: Array[Row]): (NodeIndex, Array[Int], Array[Int]) = {
-    val m = eRows.length
-    val ix = new NodeIndex(m * 2)
-    val srcIdx = new Array[Int](m)
-    val dstIdx = new Array[Int](m)
-    var i = 0
-    while (i < m) {
-      srcIdx(i) = ix.id(eRows(i).getLong(0))
-      dstIdx(i) = ix.id(eRows(i).getLong(1))
-      i += 1
-    }
-    (ix, srcIdx, dstIdx)
-  }
-
   private def longRows(spark: SparkSession, rows: Seq[Row],
                        names: String*): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows),
       StructType(names.map(StructField(_, LongType, nullable = false))))
 
-  def bfs(edges: DataFrame, sources: DataFrame, maxDepth: Int): DataFrame = {
-    // NOT keyedEdges: the frontier is seed-bounded (tiny next to the edge
-    // frame), and AQE's runtime broadcast conversion — which needs the
-    // edge side to flow through a measurable shuffle stage — is worth far
-    // more per round than a pre-partitioned edge frame (measured: keyed
-    // edges forced sort-merge rounds and graph_bfs went 1.7s → 2.7-5.2s)
-    val e = materialize(edges.select("src", "dst").distinct())
-    val srcs = sources.select(col("node").cast(LongType)).distinct()
-    val bound = graphBound(e.sparkSession)
-    // sources are seed-bounded in practice: a huge source set falls back
-    val probe = for {
-      eRows <- Bounded.collect(longEdges(e), bound)
-      sRows <- Bounded.collect(srcs, bound)
-    } yield (eRows, sRows)
-    Bounded.choose("bfs", probe) { case (eRows, sRows) =>
-      Some(localBfs(e.sparkSession, eRows, sRows, maxDepth))
-    }(bfsLoop(e, srcs, maxDepth))
-  }
-
-  /** Exact min-hop counts via driver BFS — bit-identical to the round loop
-    * (sources at depth 0, including sources outside the graph; frontier
-    * expansion capped at maxDepth).
+  /** Edge weight w of u→v: 1 (parallel edges deduplicated), the `weight`
+    * column (parallel edges kept; each relaxes, by contract), or u's
+    * out-degree over the deduplicated edges.
     */
-  private def localBfs(spark: SparkSession, eRows: Array[Row],
-                       sRows: Array[Row], maxDepth: Int): DataFrame = {
-    val m = eRows.length
-    val (ix, srcIdx, dstIdx) = indexEdges(eRows)
-    // CSR adjacency
-    val off = new Array[Int](ix.n + 1)
-    var i = 0; while (i < m) { off(srcIdx(i) + 1) += 1; i += 1 }
-    i = 0; while (i < ix.n) { off(i + 1) += off(i); i += 1 }
-    val cursor = java.util.Arrays.copyOf(off, ix.n)
-    val adj = new Array[Int](m)
-    i = 0
-    while (i < m) {
-      adj(cursor(srcIdx(i))) = dstIdx(i); cursor(srcIdx(i)) += 1; i += 1
-    }
-    val depth = new Array[Long](ix.n)
-    java.util.Arrays.fill(depth, -1L)
-    var frontier = new Array[Int](math.min(sRows.length, ix.n))
-    var fN = 0
-    // sources outside the edge set still emit their depth-0 row (the
-    // distributed init frame is sources-distinct, not graph-joined)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-    i = 0
-    while (i < sRows.length) {
-      val s = sRows(i).getLong(0)
-      val id = ix.lookup(s)
-      if (id >= 0) {
-        if (depth(id) < 0L) { depth(id) = 0L; frontier(fN) = id; fN += 1 }
-      } else out += Row(s, 0L)
-      i += 1
-    }
-    var d = 0L
-    while (d < maxDepth && fN > 0) {
-      val next = new Array[Int](ix.n)
-      var nN = 0
-      var f = 0
-      while (f < fN) {
-        val u = frontier(f); f += 1
-        var j = off(u)
-        val end = off(u + 1)
-        while (j < end) {
-          val v = adj(j); j += 1
-          if (depth(v) < 0L) { depth(v) = d + 1; next(nN) = v; nN += 1 }
-        }
-      }
-      frontier = next; fN = nN; d += 1
-    }
-    i = 0
-    while (i < ix.n) {
-      if (depth(i) >= 0L) out += Row(ix.nodes(i), depth(i))
-      i += 1
-    }
-    longRows(spark, out.toIndexedSeq, "node", "depth")
-  }
+  private sealed trait Weight
+  private case object Hop extends Weight
+  private case object Weighted extends Weight
+  private case object OutDegree extends Weight
 
-  /** The distributed frontier loop (unchanged): one AQE-broadcast join +
-    * anti-join per round.
+  /** The message along u→v from u's state and w: `local` on the driver,
+    * `sql` over the columns `state` and `w` on Spark (`div` truncates like
+    * Long division).
     */
-  private def bfsLoop(e: DataFrame, srcs: DataFrame, maxDepth: Int): DataFrame = {
-    var depths = materialize(srcs.withColumn("depth", lit(0L)))
-    var frontier = depths
-    var d = 0L
-    while (d < maxDepth && !frontier.isEmpty) {
-      val next = frontier.join(e, frontier("node") === e("src"))
-        .select(e("dst").as("node")).distinct()
-        .join(depths.select("node"), Seq("node"), "left_anti")
-        .withColumn("depth", lit(d + 1))
-      frontier = materialize(next)
-      // frontier is checkpointed, so the union is a shallow lineage —
-      // re-checkpointing the whole depth frame would rewrite O(V log V)
-      depths = depths.unionByName(frontier)
-      d += 1
-    }
-    depths
-  }
+  private sealed abstract class Message(val sql: String, val local: (Long, Long) => Long)
+  private case object Plus extends Message("state + w", Math.addExact(_, _))
+  private case object Quotient extends Message("state div w", _ / _)
+
+  /** How a vertex combines its messages. `Min`: the least message replaces
+    * a higher value. `Sum`: the messages' sum x (0 when none arrive) becomes
+    * the value base + (num · x) div den.
+    */
+  private sealed trait Combine
+  private case object Min extends Combine
+  private final case class Sum(base: Long, num: Long, den: Long) extends Combine
+
+  /** One graph analytic, read by both executors. `site` is its `Bounded`
+    * site; `out` names the result's value column. A `min` program starts
+    * from `seeds` (a `node` column, in the graph or not) at `init`; a `sum`
+    * program (seeds None) starts every vertex of the edge frame at `init`.
+    */
+  private final case class VertexProgram(
+      site: String, out: String, weight: Weight, message: Message,
+      combine: Combine, seeds: Option[DataFrame], init: Long, rounds: Int)
+
+  /** BFS: minimum hop count from the source set, up to maxDepth. */
+  def bfs(edges: DataFrame, sources: DataFrame, maxDepth: Int): DataFrame =
+    runProgram(edges, VertexProgram("bfs", "depth", Hop, Plus, Min,
+      Some(sources.select(col("node").cast(LongType))), 0L, maxDepth))
 
   /** Hop-bounded SSSP (Bellman-Ford rounds): minimum weight path from
     * `source` using at most maxHops edges. Integer weights.
     */
-  def sssp(edges: DataFrame, source: Long, maxHops: Int): DataFrame = {
-    // no dedup here (parallel edges each relax, by contract); and not
-    // keyedEdges either — the distance frame is seed-bounded like bfs's
-    // frontier, so AQE's broadcast conversion of the small side beats a
-    // pre-partitioned edge frame (see bfs note)
-    val e = materialize(
-      edges.select(col("src"), col("dst"), col("weight").cast(LongType)))
-    Bounded.choose("sssp",
-        Bounded.collect(longEdges(e, "weight"), graphBound(e.sparkSession))) {
-      eRows => Some(localSssp(e.sparkSession, eRows, source, maxHops))
-    }(ssspLoop(e, source, maxHops))
+  def sssp(edges: DataFrame, source: Long, maxHops: Int): DataFrame =
+    // a local relation: the driver executor's seed probe runs no job
+    runProgram(edges, VertexProgram("sssp", "dist", Weighted, Plus, Min,
+      Some(edges.sparkSession.createDataFrame(Seq(Tuple1(source))).toDF("node")),
+      0L, maxHops))
+
+  private val RankUnit = 1000000000000L
+
+  /** PageRank with damping 0.85, fixed iteration count, scaled-integer
+    * arithmetic: initial rank R0 = 1e12 per node;
+    * r'(v) = (15·1e12) div 100 + (85 · Σ_{u→v} (r(u) div deg(u))) div 100.
+    * Exact integer ops → deterministic across engines and partitionings;
+    * dangling and no-inflow nodes get inflow 0.
+    */
+  def pagerank(edges: DataFrame, iters: Int): DataFrame =
+    runProgram(edges, VertexProgram("pagerank", "rank", OutDegree, Quotient,
+      Sum(15L * RankUnit / 100L, 85L, 100L), None, RankUnit, iters))
+
+  /** Prepares the edge frame, probes it (and the seeds) against the bound,
+    * and runs `p` on the driver executor below it, distributed above.
+    */
+  private def runProgram(edges: DataFrame, p: VertexProgram): DataFrame = {
+    // NOT src-partitioned like connectedComponents' edges: bfs and sssp
+    // state is seed-bounded (tiny next to the edge frame), and AQE's runtime broadcast conversion — which needs the
+    // edge side to flow through a measurable shuffle stage — is worth far
+    // more per round than a pre-partitioned edge frame (measured: keyed
+    // edges forced sort-merge rounds and graph_bfs went 1.7s → 2.7-5.2s).
+    // A weighted frame is not deduplicated: parallel edges each relax, by
+    // contract.
+    val e = materialize(p.weight match {
+      case Weighted => edges.select(col("src"), col("dst"), col("weight").cast(LongType))
+      case _ => edges.select("src", "dst").distinct()
+    })
+    val bound = Bounded.bound(e.sparkSession, GraphLocalMaxEdgesConf,
+                              GraphLocalMaxEdgesDefault)
+    // seeds are small in practice: a huge seed set falls back
+    val probe = for {
+      eRows <- Bounded.collect(longEdges(e, e.columns.toSeq.drop(2): _*), bound)
+      sRows <- p.seeds.fold(Option(Array.empty[Row]))(Bounded.collect(_, bound))
+    } yield (eRows, sRows)
+    Bounded.choose(p.site, probe) { case (eRows, sRows) =>
+      Some(runLocal(e.sparkSession, p, eRows, sRows))
+    }(runDistributed(e, p))
   }
 
-  /** Exact hop-bounded Bellman-Ford on the driver — bit-identical to the
-    * round loop: after round i every reached node holds the min weight
-    * over paths of ≤ i edges (relaxations read the previous round's
-    * distances, exactly like the dist-frame join), parallel edges each
-    * relax, and arithmetic is the same wrapping Long add.
+  /** The driver executor: dense ids and Long arrays, every round one scan
+    * of the edges that leave a sending vertex.
     */
-  private def localSssp(spark: SparkSession, eRows: Array[Row],
-                        source: Long, maxHops: Int): DataFrame = {
-    val INF = Long.MaxValue
+  private def runLocal(spark: SparkSession, p: VertexProgram,
+                       eRows: Array[Row], sRows: Array[Row]): DataFrame = {
     val m = eRows.length
-    val (ix, srcIdx, dstIdx) = indexEdges(eRows)
-    val w = Array.tabulate(m)(eRows(_).getLong(2))
-    val sId = ix.lookup(source)
-    if (sId < 0) // source not in the graph: the init frame is the result
-      return longRows(spark, Seq(Row(source, 0L)), "node", "dist")
-    var prev = new Array[Long](ix.n)
-    java.util.Arrays.fill(prev, INF)
-    prev(sId) = 0L
-    var hop = 0
-    var changed = true // unchanged round = the fingerprint early-exit
-    while (hop < maxHops && changed) {
-      val next = prev.clone()
-      changed = false
+    // dense ids for the edge endpoints, then the seeds: a seed outside the
+    // graph gets an id with no edges, so it keeps its seed row exactly like
+    // the distributed init frame
+    val index = new graft.util.LongLongMap(m * 2)
+    val nodes = Array.newBuilder[Long]
+    def id(node: Long): Int = {
+      val known = index.getOrDefault(node, -1L)
+      if (known >= 0L) known.toInt
+      else { val k = index.size; index.put(node, k.toLong); nodes += node; k }
+    }
+    val src = eRows.map(r => id(r.getLong(0)))
+    val dst = eRows.map(r => id(r.getLong(1)))
+    val seeded = sRows.map(r => id(r.getLong(0)))
+    val n = index.size
+    val deg = new Array[Long](n)
+    src.foreach(deg(_) += 1L)
+    val w = Array.tabulate(m)(j => p.weight match {
+      case Hop => 1L
+      case Weighted => eRows(j).getLong(2)
+      case OutDegree => deg(src(j))
+    })
+    val state = Array.fill(n)(p.init)
+    val reached = new Array[Boolean](n)
+    var sends = new Array[Boolean](n)
+    (if (p.seeds.isEmpty) Array.range(0, n) else seeded)
+      .foreach { v => reached(v) = true; sends(v) = true }
+    var r = 0
+    while (r < p.rounds && sends.contains(true)) {
+      // senders read the previous round's values, never one written in this round
+      val sent = state.clone()
+      val inflow = new Array[Long](n)
+      val next = new Array[Boolean](n)
       var j = 0
       while (j < m) {
-        val p = prev(srcIdx(j))
-        if (p != INF) {
-          val nd = p + w(j)
-          if (nd < next(dstIdx(j))) { next(dstIdx(j)) = nd; changed = true }
+        if (sends(src(j))) {
+          val v = dst(j)
+          val msg = p.message.local(sent(src(j)), w(j))
+          p.combine match {
+            case Min =>
+              if (!reached(v) || msg < state(v)) {
+                state(v) = msg; reached(v) = true; next(v) = true
+              }
+            case _: Sum => inflow(v) = Math.addExact(inflow(v), msg)
+          }
         }
         j += 1
       }
-      prev = next; hop += 1
+      p.combine match {
+        case Min => sends = next
+        case Sum(base, num, den) =>
+          for (v <- 0 until n)
+            state(v) = Math.addExact(base, Math.multiplyExact(num, inflow(v)) / den)
+      }
+      r += 1
     }
-    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-    var i = 0
-    while (i < ix.n) {
-      if (prev(i) != INF) out += Row(ix.nodes(i), prev(i))
-      i += 1
-    }
-    longRows(spark, out.toIndexedSeq, "node", "dist")
+    val ids = nodes.result()
+    val out = (0 until n).filter(reached(_)).map(v => Row(ids(v), state(v)))
+    longRows(spark, out, "node", p.out)
   }
 
-  /** The distributed Bellman-Ford rounds (unchanged). */
-  private def ssspLoop(e: DataFrame, source: Long, maxHops: Int): DataFrame = {
-    var dist = materialize(
-      e.sparkSession.range(1).select(lit(source).as("node"), lit(0L).as("dist")))
-    // convergence by (XOR-of-row-hashes, count) fingerprint: distances only
-    // decrease and nodes only get added, so an unchanged fingerprint means
-    // no row changed — one cheap aggregate per round instead of an except()
-    // shuffle; see Fixpoint.fingerprint for the residual 2^-64 collision
-    // bound and why the paired count kills cardinality-cancellation classes
-    def checksum(df: DataFrame): (Long, Long) =
-      graft.util.Fixpoint.fingerprint(df, col("node"), col("dist"))
-    var sum0 = checksum(dist)
-    var i = 0
-    while (i < maxHops) {
-      val relaxed = dist.join(e, dist("node") === e("src"))
-        .select(e("dst").as("node"), (dist("dist") + e("weight")).as("dist"))
-        .unionByName(dist)
-        .groupBy("node").agg(min(col("dist")).as("dist"))
-      val next = materialize(relaxed)
-      val sum1 = checksum(next)
-      if (sum1 == sum0) return next
-      sum0 = sum1
-      dist = next
-      i += 1
-    }
-    dist
-  }
-
-  /** Connected components: component id = minimum reachable node id. Each
-    * round combines neighbor min-label propagation with pointer jumping
-    * (label := label of label), giving O(log n) rounds instead of
-    * O(diameter) — long chains/paths converge fast. Pass both edge
-    * directions for undirected graphs.
-    *
-    * A measured negative result, recorded: a semi-naive variant (only
-    * labels that DECREASED last round generate push/jump candidates, with
-    * convergence = empty changed set) benchmarked ~2x SLOWER at sf0.1
-    * (7.9s vs ~4s) in a same-session A/B. Two reasons: the delta plumbing
-    * adds two joins per round (jump-down and jump-up replace the single
-    * full self-jump, plus the changed-set derivation), and restricting
-    * the jump to changed-adjacent nodes WEAKENS pointer jumping — chains
-    * collapse over more rounds. Full-frame rounds keep the aggressive
-    * label:=label(label) doubling; at scale the per-round volume is the
-    * label frame, which is node-, not edge-, sized, so the "delta saves
-    * shuffle bytes" argument buys little here to begin with.
+  /** The distributed executor: per superstep, the sending vertices'
+    * (node, state) joined to the weighted edges (src, dst, w) on src, the
+    * messages grouped by dst, and the round's frame materialized.
     */
+  private def runDistributed(e: DataFrame, p: VertexProgram): DataFrame = {
+    val weighted = p.weight match {
+      case Hop => e.withColumn("w", lit(1L))
+      case Weighted => e.withColumnRenamed("weight", "w")
+      // keyed checkpoint: the degree-weighted edges are loop-invariant and
+      // joined on src every round — preserving their HashPartitioning(src)
+      // removes the edge-sized exchange from every iteration (the frame a
+      // 100 TB corpus actually pays to move; a sum program's state frames
+      // are node-sized)
+      case OutDegree =>
+        materializeKeyed(e.join(e.groupBy("src").agg(count(lit(1)).as("w")), "src"))
+    }
+    def messages(from: DataFrame): DataFrame =
+      from.join(weighted, from("node") === weighted("src"))
+        .select(weighted("dst").as("node"), expr(p.message.sql).as("msg"))
+    p.combine match {
+      case Min =>
+        // each frame is materialized with its row count and value range
+        // observed in the same job: the count is the emptiness test, and
+        // while no frame holds a value below the highest one held before
+        // it, no vertex was lowered, so each vertex holds exactly one row
+        var (highest, lowered, sends) = (p.init, false, true)
+        def observed(frame: DataFrame): DataFrame = {
+          val watched = frame.observe("round", count(lit(1)).as("n"),
+            min("state").as("lo"), max("state").as("hi"))
+          val out = materialize(watched)
+          // read off the executed plan once the job is done, not through the
+          // asynchronous listener bus an `Observation` waits on
+          val stats = watched.queryExecution.observedMetrics("round")
+          sends = stats.getLong(0) != 0L
+          if (sends) {
+            lowered ||= stats.getLong(1) < highest
+            highest = math.max(highest, stats.getLong(2))
+          }
+          out
+        }
+        var frontier = observed(p.seeds.get.distinct().withColumn("state", lit(p.init)))
+        var state = frontier
+        var r = 0
+        while (r < p.rounds && sends) {
+          // a message survives when no value the vertex holds is as low
+          val held = state.select(col("node").as("held_node"), col("state").as("held"))
+          frontier = observed(
+            messages(frontier).groupBy("node").agg(min("msg").as("state"))
+              .join(held, col("node") === col("held_node") &&
+                          col("held") <= col("state"), "left_anti"))
+          // frontier is checkpointed, so the union is a shallow lineage —
+          // re-checkpointing the whole state frame would rewrite O(V log V)
+          state = state.unionByName(frontier)
+          r += 1
+        }
+        // a lowered vertex holds one row per drop; the least is its value
+        if (lowered) state.groupBy("node").agg(min("state").as(p.out))
+        else state.withColumnRenamed("state", p.out)
+      case Sum(base, num, den) =>
+        val nodes = materialize(
+          e.select(col("src").as("node"))
+            .unionByName(e.select(col("dst").as("node"))).distinct())
+        var state = nodes.withColumn("state", lit(p.init))
+        // Measured NEGATIVE result (r13), recorded: letting this fixed-count
+        // loop stay LAZY (no per-round materialize; checkpoint every 8th round
+        // only) was a wash at sf0.1 (3.1-4.9s vs 3.0-3.6) and a 2-3x REGRESSION
+        // at sf1 (18-34s vs 9.2s) — the per-round checkpoint is what gives AQE
+        // an exact size for the rank frame, so each round's join converts to a
+        // broadcast; one deep lazy plan estimates poorly and falls into
+        // sort-merge rounds. The eager per-round materialize stays.
+        for (_ <- 1 to p.rounds) {
+          // dangling-node handling WITHOUT a per-round outer join: union a
+          // zero-message row per node into the aggregation — the same
+          // (node, inflow) frame (sum + 0 = sum; absent groups surface with
+          // inflow 0), one join and one exchange fewer per round than
+          // aggregate-then-left-join-nodes
+          state = materialize(
+            messages(state).unionByName(nodes.withColumn("msg", lit(0L)))
+              .groupBy("node").agg(sum(col("msg")).as("inflow"))
+              .select(col("node"),
+                expr(s"${base}L + ${num}L * inflow div ${den}L").as("state")))
+        }
+        state.withColumnRenamed("state", p.out)
+    }
+  }
+
   /** Edge-count bound for connectedComponents' driver union-find (see
     * [[graft.util.Bounded]]).
     */
@@ -351,8 +348,35 @@ object Graphs {
     longRows(spark, out.toIndexedSeq, "node", "component")
   }
 
+  /** Connected components: component id = minimum reachable node id. Each
+    * round combines neighbor min-label propagation with pointer jumping
+    * (label := label of label), giving O(log n) rounds instead of
+    * O(diameter) — long chains/paths converge fast. Pass both edge
+    * directions for undirected graphs.
+    *
+    * A measured negative result, recorded: a semi-naive variant (only
+    * labels that DECREASED last round generate push/jump candidates, with
+    * convergence = empty changed set) benchmarked ~2x SLOWER at sf0.1
+    * (7.9s vs ~4s) in a same-JVM A/B. Two reasons: the delta plumbing
+    * adds two joins per round (jump-down and jump-up replace the single
+    * full self-jump, plus the changed-set derivation), and restricting
+    * the jump to changed-adjacent nodes WEAKENS pointer jumping — chains
+    * collapse over more rounds. Full-frame rounds keep the aggressive
+    * label:=label(label) doubling; at scale the per-round volume is the
+    * label frame, which is node-, not edge-, sized, so the "delta saves
+    * shuffle bytes" argument buys little here to begin with.
+    */
   def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame = {
-    val e = keyedEdges(edges, "src", "dst")
+    // loop-invariant edge relation, deduped and checkpointed WITH
+    // HashPartitioning(src) preserved: every round joins label state
+    // against `src`, so keeping the edge frame pre-partitioned removes the
+    // edge-sized exchange from every round — at corpus scale the edge frame
+    // is the heavy side of those joins. The repartition lands before
+    // dropDuplicates: (src) partitioning satisfies the (src, dst) clustering
+    // the dedup needs (equal pairs share src), so the dedup adds no second
+    // exchange.
+    val e = materializeKeyed(
+      edges.select("src", "dst").repartition(col("src")).dropDuplicates("src", "dst"))
     val bound = Bounded.bound(e.sparkSession, CcLocalMaxEdgesConf,
                               CcLocalMaxEdgesDefault)
     Bounded.choose("cc", Bounded.collect(longEdges(e), bound)) {
@@ -404,95 +428,6 @@ object Graphs {
       i += 1
     }
     labels
-  }
-
-  /** PageRank with damping 0.85, fixed iteration count, scaled-integer
-    * arithmetic: initial rank R0 = 1e12 per node;
-    * r'(v) = (15·1e12) div 100 + (85 · Σ_{u→v} (r(u) div deg(u))) div 100.
-    * Exact integer ops → deterministic across engines and partitionings.
-    */
-  def pagerank(edges: DataFrame, iters: Int): DataFrame = {
-    val e = materialize(edges.select("src", "dst").distinct())
-    Bounded.choose("pagerank",
-        Bounded.collect(longEdges(e), graphBound(e.sparkSession))) {
-      eRows => Some(localPagerank(e.sparkSession, eRows, iters))
-    }(pagerankLoop(e, iters))
-  }
-
-  /** Exact scaled-integer PageRank on the driver — bit-identical to the
-    * round loop: same distinct-edge out-degrees, same per-edge
-    * `rank div deg` contribution (Long division truncates identically to
-    * Spark's IntegralDivide), inflow summed in wrapping Long adds
-    * (commutative — no order dependence), dangling/no-inflow nodes get
-    * inflow 0 exactly like the zero-row union.
-    */
-  private def localPagerank(spark: SparkSession, eRows: Array[Row],
-                            iters: Int): DataFrame = {
-    val Unit_ : Long = 1000000000000L
-    val m = eRows.length
-    val (ix, srcIdx, dstIdx) = indexEdges(eRows)
-    val deg = new Array[Long](ix.n)
-    var i = 0; while (i < m) { deg(srcIdx(i)) += 1L; i += 1 }
-    val rank = new Array[Long](ix.n)
-    java.util.Arrays.fill(rank, Unit_)
-    var it = 0
-    while (it < iters) {
-      val inflow = new Array[Long](ix.n)
-      var j = 0
-      while (j < m) {
-        inflow(dstIdx(j)) += rank(srcIdx(j)) / deg(srcIdx(j))
-        j += 1
-      }
-      i = 0
-      while (i < ix.n) {
-        rank(i) = 15L * Unit_ / 100L + 85L * inflow(i) / 100L
-        i += 1
-      }
-      it += 1
-    }
-    val out = new Array[Row](ix.n)
-    i = 0
-    while (i < ix.n) { out(i) = Row(ix.nodes(i), rank(i)); i += 1 }
-    longRows(spark, out.toIndexedSeq, "node", "rank")
-  }
-
-  /** The distributed fixed-count rounds (unchanged). */
-  private def pagerankLoop(e: DataFrame, iters: Int): DataFrame = {
-    val Unit_ : Long = 1000000000000L
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // keyed checkpoint: eDeg is loop-invariant and joined on src every
-    // round — preserving its HashPartitioning(src) removes the edge-sized
-    // exchange from every iteration (the frame a 100 TB corpus actually
-    // pays to move; rank frames are node-sized)
-    val eDeg = materializeKeyed(e.join(deg, "src"))
-    val nodes = materialize(
-      e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node"))).distinct())
-    var ranks = nodes.withColumn("rank", lit(Unit_))
-    // Measured NEGATIVE result (r13), recorded: letting this fixed-count
-    // loop stay LAZY (no per-round materialize; checkpoint every 8th round
-    // only) was a wash at sf0.1 (3.1-4.9s vs 3.0-3.6) and a 2-3x REGRESSION
-    // at sf1 (18-34s vs 9.2s) — the per-round checkpoint is what gives AQE
-    // an exact size for the rank frame, so each round's join converts to a
-    // broadcast; one deep lazy plan estimates poorly and falls into
-    // sort-merge rounds. The eager per-round materialize stays.
-    for (_ <- 1 to iters) {
-      // dangling-node handling WITHOUT a per-round outer join: union a
-      // zero-contribution row per node into the inflow aggregation — the
-      // same (node, inflow) frame (sum + 0 = sum; absent groups surface
-      // with inflow 0), one join and one exchange fewer per round than
-      // aggregate-then-left-join-nodes
-      val contribs = ranks.join(eDeg, ranks("node") === eDeg("src"))
-        .select(eDeg("dst").as("node"),
-                expr("rank div deg").as("contrib"))
-      ranks = materialize(
-        contribs.unionByName(nodes.withColumn("contrib", lit(0L)))
-          .groupBy("node").agg(sum(col("contrib")).as("inflow"))
-          .select(col("node"),
-            (lit(15L * Unit_ / 100L) +
-             expr("85 * inflow div 100")).as("rank")))
-    }
-    ranks
   }
 
   /** Per-vertex triangle counts of the undirected simple graph (edges taken

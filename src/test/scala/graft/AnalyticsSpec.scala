@@ -123,24 +123,48 @@ class AnalyticsSpec extends SparkSpecBase {
     } finally spark.conf.unset(Graphs.CcLocalMaxEdgesConf)
   }
 
+  /** The (node, value) rows `run` gives at the default bound and at bound
+    * 0, after checking that the first ran the driver executor and the
+    * second the distributed one, that they agree, and that no node has two
+    * rows.
+    */
+  private def onBothExecutors(site: String)(run: => DataFrame): Map[Long, Long] = {
+    def result(): Map[Long, Long] = {
+      val rows = run.collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(rows.map(_._1).distinct.length == rows.length, rows.toSeq)
+      rows.toMap
+    }
+    val local = result()
+    assert(Bounded.strategy(site) == "local")
+    spark.conf.set(Graphs.GraphLocalMaxEdgesConf, "0")
+    try {
+      val dist = result()
+      assert(Bounded.strategy(site) == "distributed")
+      assert(dist == local)
+    } finally spark.conf.unset(Graphs.GraphLocalMaxEdgesConf)
+    local
+  }
+
+  private def weightedEdgesOf(edges: (Long, Long, Long)*): DataFrame =
+    spark.createDataset(edges)(Encoders.product[(Long, Long, Long)])
+      .toDF("src", "dst", "weight")
+
   test("bfs: distributed loop above the local bound agrees bit-for-bit, " +
        "including out-of-graph sources and the depth cap") {
     //  1->2->4->5->6 with shortcut 1->3->4; node 6 is beyond maxDepth 3
     //  from source 1; source 999 is not in the graph (depth-0 row only)
     val e = edgesOf(1L -> 2L, 1L -> 3L, 2L -> 4L, 3L -> 4L, 4L -> 5L, 5L -> 6L)
-    val srcs = spark.createDataset(Seq(1L, 999L))(Encoders.scalaLong).toDF("node")
-    def run(): Map[Long, Long] = Graphs.bfs(e, srcs, 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val local = run()
-    assert(Bounded.strategy("bfs") == "local")
-    spark.conf.set(Graphs.GraphLocalMaxEdgesConf, "0")
-    try {
-      val dist = run()
-      assert(Bounded.strategy("bfs") == "distributed")
-      assert(dist == local)
-      assert(local == Map(1L -> 0L, 999L -> 0L, 2L -> 1L, 3L -> 1L,
-                          4L -> 2L, 5L -> 3L)) // 6 beyond the cap
-    } finally spark.conf.unset(Graphs.GraphLocalMaxEdgesConf)
+    def bfs(edges: DataFrame, sources: Seq[Long], maxDepth: Int) =
+      onBothExecutors("bfs")(Graphs.bfs(edges,
+        spark.createDataset(sources)(Encoders.scalaLong).toDF("node"), maxDepth))
+    val reached = Map(1L -> 0L, 999L -> 0L, 2L -> 1L, 3L -> 1L,
+                      4L -> 2L, 5L -> 3L) // 6 beyond the cap
+    assert(bfs(e, Seq(1L, 999L), 3) == reached)
+    // a duplicated source is one source, in or out of the graph
+    assert(bfs(e, Seq(1L, 999L, 1L, 999L), 3) == reached)
+    // round cap 0, and no edges: the sources alone
+    assert(bfs(e, Seq(1L, 999L), 0) == Map(1L -> 0L, 999L -> 0L))
+    assert(bfs(edgesOf(), Seq(1L, 999L), 3) == Map(1L -> 0L, 999L -> 0L))
   }
 
   test("sssp: distributed loop above the local bound agrees bit-for-bit, " +
@@ -148,52 +172,61 @@ class AnalyticsSpec extends SparkSpecBase {
     // parallel edges 1->2 (w10, w7); cheaper 3-hop detour 1->3->4->2 (w3)
     // needs all 3 hops; 2->5 puts 5 at 4 hops via the detour but 2 hops
     // via the w7 edge — the hop cap must keep the 2-hop value
-    val e = spark.createDataset(Seq(
-        (1L, 2L, 10L), (1L, 2L, 7L), (1L, 3L, 1L), (3L, 4L, 1L),
-        (4L, 2L, 1L), (2L, 5L, 1L)))(
-        Encoders.product[(Long, Long, Long)]).toDF("src", "dst", "weight")
-    def run(): Map[Long, Long] = Graphs.sssp(e, 1L, 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val local = run()
-    assert(Bounded.strategy("sssp") == "local")
-    spark.conf.set(Graphs.GraphLocalMaxEdgesConf, "0")
-    try {
-      val dist = run()
-      assert(Bounded.strategy("sssp") == "distributed")
-      assert(dist == local)
-      assert(local == Map(1L -> 0L, 2L -> 3L, 3L -> 1L, 4L -> 2L, 5L -> 8L))
-    } finally spark.conf.unset(Graphs.GraphLocalMaxEdgesConf)
-    // source outside the graph: both paths emit exactly the depth-0 row
-    val lone = Graphs.sssp(e, 42L, 3).collect()
-    assert(Bounded.strategy("sssp") == "local")
-    assert(lone.length == 1 && lone(0).getLong(0) == 42L && lone(0).getLong(1) == 0L)
-    spark.conf.set(Graphs.GraphLocalMaxEdgesConf, "0")
-    try {
-      val loneD = Graphs.sssp(e, 42L, 3).collect()
-      assert(Bounded.strategy("sssp") == "distributed")
-      assert(loneD.length == 1 && loneD(0).getLong(0) == 42L && loneD(0).getLong(1) == 0L)
-    } finally spark.conf.unset(Graphs.GraphLocalMaxEdgesConf)
+    val e = weightedEdgesOf((1L, 2L, 10L), (1L, 2L, 7L), (1L, 3L, 1L),
+                            (3L, 4L, 1L), (4L, 2L, 1L), (2L, 5L, 1L))
+    def sssp(edges: DataFrame, source: Long, maxHops: Int) =
+      onBothExecutors("sssp")(Graphs.sssp(edges, source, maxHops))
+    assert(sssp(e, 1L, 3) == Map(1L -> 0L, 2L -> 3L, 3L -> 1L, 4L -> 2L, 5L -> 8L))
+    // source outside the graph, round cap 0, and no edges: the source alone
+    assert(sssp(e, 42L, 3) == Map(42L -> 0L))
+    assert(sssp(e, 1L, 0) == Map(1L -> 0L))
+    assert(sssp(weightedEdgesOf(), 1L, 3) == Map(1L -> 0L))
+    // zero weights reach 4 at 0 in round 2; the negative edge 4->2 lowers
+    // the already-reached 2 (5 in round 1) to -10 in round 3, and 5 follows
+    // in round 4 — an executor that settles a node on its first visit
+    // keeps 2 -> 5
+    val neg = weightedEdgesOf((1L, 2L, 5L), (1L, 3L, 0L), (3L, 4L, 0L),
+                              (4L, 2L, -10L), (2L, 5L, 1L))
+    assert(sssp(neg, 1L, 3) == Map(1L -> 0L, 2L -> -10L, 3L -> 0L, 4L -> 0L, 5L -> 6L))
+    assert(sssp(neg, 1L, 4) == Map(1L -> 0L, 2L -> -10L, 3L -> 0L, 4L -> 0L, 5L -> -9L))
+    // in round 2, 2->3 lowers 3 from 5 to 2 while 3 sends: 3 must send the
+    // 5 it held after round 1, or 4 gets the 3-hop value 3 under a 2-hop cap
+    val lowered = weightedEdgesOf((1L, 2L, 1L), (1L, 3L, 5L), (2L, 3L, 1L), (3L, 4L, 1L))
+    assert(sssp(lowered, 1L, 2) == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 6L))
   }
 
   test("pagerank: distributed loop above the local bound agrees rank-for-rank " +
        "on an asymmetric graph with a dangling node and a duplicate edge") {
     // 4 is dangling (dst only); duplicate 1->2 must dedup before degrees
     val e = edgesOf(1L -> 2L, 1L -> 2L, 2L -> 3L, 3L -> 1L, 1L -> 4L, 2L -> 1L)
-    def run(): Map[Long, Long] = Graphs.pagerank(e, 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val local = run()
-    assert(Bounded.strategy("pagerank") == "local")
-    spark.conf.set(Graphs.GraphLocalMaxEdgesConf, "0")
-    try {
-      val dist = run()
-      assert(Bounded.strategy("pagerank") == "distributed")
-      assert(dist == local)
-      assert(local.keySet == Set(1L, 2L, 3L, 4L))
-      // integer semantics sanity: 2 and 4 each receive exactly half of
-      // 1's rank (equal by symmetry); 1 additionally drains 3 and half
-      // of 2, so it sits strictly above the dangling node
-      assert(local(4L) == local(2L) && local(4L) < local(1L))
-    } finally spark.conf.unset(Graphs.GraphLocalMaxEdgesConf)
+    def pagerank(edges: DataFrame, iters: Int) =
+      onBothExecutors("pagerank")(Graphs.pagerank(edges, iters))
+    val ranks = pagerank(e, 4)
+    // 2 and 4 each receive exactly half of 1's rank (equal by symmetry); 1
+    // additionally drains 3 and half of 2, so it sits above the dangling node
+    assert(ranks == Map(1L -> 773733984375L, 2L -> 492702734375L,
+                        3L -> 373264453125L, 4L -> 492702734375L))
+    // round cap 0: every node at the initial rank; no edges: no nodes
+    assert(pagerank(e, 0) == Map(1L -> 1000000000000L, 2L -> 1000000000000L,
+                                 3L -> 1000000000000L, 4L -> 1000000000000L))
+    assert(pagerank(edgesOf(), 4).isEmpty)
+  }
+
+  test("graph programs: a Long overflow throws ArithmeticException on both " +
+       "executors") {
+    def throwsAtBothBounds(run: => DataFrame): Unit = {
+      intercept[ArithmeticException](run.collect())
+      spark.conf.set(Graphs.GraphLocalMaxEdgesConf, "0")
+      try intercept[ArithmeticException](run.collect())
+      finally spark.conf.unset(Graphs.GraphLocalMaxEdgesConf)
+    }
+    // 1 -> 2 costs Long.MaxValue - 1, so 3 would sit at Long.MaxValue + 4
+    throwsAtBothBounds(Graphs.sssp(
+      weightedEdgesOf((1L, 2L, Long.MaxValue - 1L), (2L, 3L, 5L)), 1L, 3))
+    // 200k leaves send the hub 2e17 rank units, and 85 times that is past
+    // Long.MaxValue
+    throwsAtBothBounds(Graphs.pagerank(
+      spark.range(200000).select((col("id") + 2L).as("src"), lit(1L).as("dst")), 1))
   }
 
   test("triangle counts: K4 corners sit in 3 triangles; wedges close to none") {
